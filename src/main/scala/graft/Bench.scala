@@ -343,21 +343,8 @@ object Bench {
         // the r16 driver's local[8] leg did exactly that. A legacy record
         // without a "cpus" field (pre-r17 format) is upgradeable by any
         // quiet full run; from then on the config is pinned.
-        val configMatches: Boolean =
-          try {
-            val p = java.nio.file.Paths.get("bench_result.json")
-            if (!java.nio.file.Files.exists(p)) true
-            else {
-              val rec = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-              val cpusRe = """"cpus":(\d+)""".r
-              val sfRe = """"sf":"([^"]*)"""".r
-              val cpusOk = cpusRe.findFirstMatchIn(rec)
-                .forall(_.group(1) == cpus)
-              val sfOk = sfRe.findFirstMatchIn(rec)
-                .forall(_.group(1) == sfDir)
-              cpusOk && sfOk
-            }
-          } catch { case _: Exception => true }
+        val configMatches =
+          recordConfigMatches(java.nio.file.Paths.get("bench_result.json"), cpus, sfDir)
         if (window == "quiet" && only.isEmpty && configMatches)
           writeTo("bench_result.json")
         else System.err.println(
@@ -366,4 +353,18 @@ object Bench {
     }
     spark.stop()
   }
+
+  /** Whether the committed record at `record` was taken with this run's
+    * `cpus` and `sfDir` (no record: nothing to protect). Fails CLOSED: a
+    * record that cannot be read is never overwritten by a guess. */
+  private[graft] def recordConfigMatches(record: java.nio.file.Path,
+                                         cpus: String, sfDir: String): Boolean =
+    !java.nio.file.Files.exists(record) || (try {
+      val rec = new String(java.nio.file.Files.readAllBytes(record), "UTF-8")
+      val cpusOk = """"cpus":(\d+)""".r.findFirstMatchIn(rec)
+        .forall(_.group(1) == cpus)
+      val sfOk = """"sf":"([^"]*)"""".r.findFirstMatchIn(rec)
+        .forall(_.group(1) == sfDir)
+      cpusOk && sfOk
+    } catch { case _: Exception => false })
 }

@@ -218,6 +218,13 @@ object DatalogCompiler {
     case _ => None
   }
 
+  /** Drop the statistics cached for one relation — for an owner retiring
+    * a long-lived stats source, whose plan the cache key would otherwise
+    * keep reachable. */
+  private[graft] def forgetStats(docs: DataFrame): Unit = statsCache.synchronized {
+    statsCache.remove(docs.queryExecution.analyzed.canonicalized); ()
+  }
+
   /** Test/diagnostic hook: drop all cached relation statistics. */
   private[datalog] def clearStatsCache(): Unit =
     statsCache.synchronized(statsCache.clear())
@@ -241,7 +248,13 @@ class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
                         * against both heuristic arms). Production keeps
                         * true: written order can build a cartesian a
                         * selective group would have pruned. */
-                      reorder: Boolean = true) {
+                      reorder: Boolean = true,
+                      /** Relation whose statistics rank the joins in
+                        * place of the queried one (same columns): a
+                        * stable stand-in keeps the stats cache hitting
+                        * across snapshots that differ only in recent
+                        * rows. Results never depend on it. */
+                      statsSource: Option[DataFrame] = None) {
 
   /** A compiled clause set = bindings relation; columns are variable names. */
   private type Rel = DataFrame
@@ -655,7 +668,8 @@ class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
     if (!reorder || groups.lengthCompare(2) < 0) return groups
     val stats: Option[(Long, Map[String, DatalogCompiler.AttrStat])] =
       if (useStats)
-        try Some(DatalogCompiler.attrStats(docs, groups.flatMap(_._2.map(_.attr))))
+        try Some(DatalogCompiler.attrStats(statsSource.getOrElse(docs),
+          groups.flatMap(_._2.map(_.attr))))
         catch { case _: Exception => None }
       else None
     def estimate(g: (Term, Seq[Pattern])): Double = {
@@ -1259,20 +1273,23 @@ class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
       // and a chain still unresolved at MaxDiscoveredDepth throws.
       val probeBatch = 4
       var depth = 0 // index of the first frontier in the current batch
+      // f_{k+1}: the ids one step on from f_k
+      def step(f: org.apache.spark.rdd.RDD[String]): org.apache.spark.rdd.RDD[String] = {
+        val nxt = f.map((_, ())).join(edges)
+          .map { case (_, (_, dst)) => dst }.distinct()
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        persisted += nxt
+        nxt
+      }
       // f_0: ids reachable in exactly 1 step
       var cur = edges.map(_._2).distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
       persisted += cur
       while (depth >= 0) { // loop exits by return/throw below
         DatalogCompiler.checkDeadline("recursive pull chain discovery")
+        // f_depth .. f_{depth+probeBatch-1}
         val batch = scala.collection.mutable.Buffer(cur)
-        while (batch.size < probeBatch) {
-          val nxt = batch.last.map((_, ())).join(edges)
-            .map { case (_, (_, dst)) => dst }.distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          persisted += nxt
-          batch += nxt
-        }
+        while (batch.size < probeBatch) batch += step(batch.last)
         val counts = edges.sparkContext.union(
           batch.toSeq.zipWithIndex.map { case (f, i) => f.map(_ => (i, 1L)) })
           .countByKey() // ONE job probes probeBatch levels
@@ -1283,7 +1300,7 @@ class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
             return depth + i
           case None if depth + probeBatch - 1 < PullRecur.MaxDiscoveredDepth =>
             depth += probeBatch
-            cur = batch.last
+            cur = step(batch.last) // the next batch starts one level on
           case _ => throw new IllegalArgumentException(
             s"unbounded recursive pull {:$attr ...}: ref chain exceeds " +
               s"${PullRecur.MaxDiscoveredDepth} levels (or the refs cycle) — " +

@@ -4,8 +4,10 @@ import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.VersionedDoc
 
@@ -37,6 +39,20 @@ import graft.core.VersionedDoc
   * → row_number() over (partition by id, order by valid_from desc, tx_time
   * desc) = 1 → drop tombstones. The filter is pushed to parquet; the
   * window shuffles by id exactly once.
+  *
+  * Current reads (`asOf(vt)` with no tx-time cut, hence [[db]], [[q]],
+  * [[qPublic]] and the alert poll) skip that scan: Crux answers `(db node)`
+  * from maintained indexes, and this store keeps the moral equivalent — a
+  * BASE (the live top-1 version per id as of a base time vt0, materialized
+  * once with `localCheckpoint`, so it is lineage-free and no compaction
+  * can swap files under it) plus a driver-side DELTA (the rows this
+  * instance appended since vt0, and rows still future-dated at vt0). A
+  * current read picks the delta's winners at its valid time on the driver,
+  * filters their ids out of the base's own scan, and unions the live
+  * winners back in as a local relation — no timestamp literal or id list
+  * enters the plan, so its generated code is the same on every request. The base is dropped, and rebuilt on the next current read, by
+  * a retroactive row (validFrom < vt0), a [[putBatch]], an [[evict]], or a
+  * delta past [[DocumentStore.MaxDelta]] rows; [[compact]] keeps it.
   */
 /** Speculative transaction op for [[DocumentStore.withTx]] — the crux
   * `::xt/put` / `::xt/delete` / `::xt/match` op shapes. A failed Match
@@ -93,6 +109,9 @@ class DocumentStore(val spark: SparkSession, val path: String) {
       closed = true
       Option(maintenance.get()).foreach(h =>
         try h.close() catch { case _: Exception => () })
+      // reads on a closed store take the scan path; the base's blocks go now
+      Option(view).foreach(_.base.rdd.unpersist(blocking = false))
+      dropView()
       DocumentStore.release(spark, path, lockToken)
     }
   }
@@ -122,7 +141,18 @@ class DocumentStore(val spark: SparkSession, val path: String) {
       .withColumn("valid_date", to_date(col("validFrom")))
       .write.mode(SaveMode.Append).partitionBy("valid_date").parquet(path)
 
-  private def append(rows: Seq[VersionedDoc]): Unit = appendDF(rows.toDS().toDF())
+  /** Every driver-side write lands here, under `lock`: the delta sees each
+    * committed row, and a failed append drops the base (a partial commit
+    * would otherwise be invisible to current reads). */
+  private def append(rows: Seq[VersionedDoc]): Unit = {
+    try appendDF(rows.toDS().toDF())
+    catch { case e: Throwable => dropView(); throw e }
+    Option(view).foreach { v =>
+      if (rows.exists(_.validFrom.getTime < v.base.vt0) ||
+          v.delta.size + rows.size > DocumentStore.MaxDelta) dropView()
+      else view = v.copy(delta = v.delta ++ rows)
+    }
+  }
 
   /** Writes on a closed store would interleave an unserialized tx clock
     * with whatever driver now legitimately holds the lock — fail fast. */
@@ -220,6 +250,8 @@ class DocumentStore(val spark: SparkSession, val path: String) {
       requireOpen()
       val tx = nextTxTime()
       val vf = validFrom.getOrElse(tx)
+      // the rows never reach the driver, so the delta cannot track them
+      dropView()
       appendDF(docs
         .select(
           col("id").cast("string").as("id"),
@@ -252,7 +284,10 @@ class DocumentStore(val spark: SparkSession, val path: String) {
   def evict(ids: Seq[String]): Unit = {
     require(ids.nonEmpty, "evict: no ids given")
     require(ids.forall(i => i != null && i.nonEmpty), "evict: null/empty id")
-    rewriteTable("evict", _.filter(!col("id").isin(ids: _*)))
+    lock.synchronized {
+      dropView()
+      rewriteTable("evict", _.filter(!col("id").isin(ids: _*)))
+    }
   }
 
   def evict(id: String): Unit = evict(Seq(id))
@@ -453,8 +488,15 @@ class DocumentStore(val spark: SparkSession, val path: String) {
   // ------------------------------------------------------------------ reads
 
   /** Q10/Q11: snapshot of all documents visible at (valid-time, tx-time).
-    * Result schema: (id, validFrom, txTime, doc). */
-  def asOf(validTime: Timestamp, txTime: Timestamp): DataFrame = {
+    * Result schema: (id, validFrom, txTime, doc). With no tx-time cut and
+    * a valid time at or past the base's, this is the current view (class
+    * doc); otherwise the version-log scan. */
+  def asOf(validTime: Timestamp, txTime: Timestamp): DataFrame =
+    currentAt(validTime, txTime).map(_._1).getOrElse(scanAsOf(validTime, txTime))
+
+  /** The version-log scan behind every read the current view does not
+    * answer — and the reference the view is tested against. */
+  private[store] def scanAsOf(validTime: Timestamp, txTime: Timestamp): DataFrame = {
     val w = Window.partitionBy("id")
       .orderBy(col("validFrom").desc, col("txTime").desc)
     // valid_date = date(validFrom), so validFrom <= vt implies
@@ -476,6 +518,83 @@ class DocumentStore(val spark: SparkSession, val path: String) {
   }
 
   def asOf(validTime: Timestamp): DataFrame = asOf(validTime, DocumentStore.MaxTxTime)
+
+  // ----------------------------------------------------------- current view
+
+  /** Written under `lock` only; readers take one consistent snapshot. */
+  @volatile private var view: DocumentStore.View = null
+  /** Wall-clock ms before which no base is built: set when more rows than
+    * [[DocumentStore.MaxDelta]] were future-dated at the last attempt
+    * (they fall due only as time passes). */
+  @volatile private var noViewUntil = 0L
+
+  /** Drop the base (caller holds `lock`). Its blocks are released by
+    * Spark's cleaner once no in-flight read references them. */
+  private def dropView(): Unit = {
+    Option(view).foreach(_.base.statsSources.values()
+      .forEach(graft.query.datalog.DatalogCompiler.forgetStats(_)))
+    view = null
+  }
+
+  /** Build the base as of `vt0` (caller holds `lock`, so no write or
+    * compaction runs meanwhile): one job collects the future-dated rows
+    * into the delta, one window job materializes the base. */
+  private def buildView(vt0: Long): Option[DocumentStore.View] = {
+    val raw = versionsRaw()
+    val cut = lit(new Timestamp(vt0))
+    val future = raw.filter(col("validFrom") > cut).drop("valid_date")
+      .as[VersionedDoc].limit(DocumentStore.MaxDelta + 1).collect().toVector
+    if (future.size > DocumentStore.MaxDelta) {
+      noViewUntil = System.currentTimeMillis() + DocumentStore.ViewRetryMs
+      return None
+    }
+    val w = Window.partitionBy("id")
+      .orderBy(col("validFrom").desc, col("txTime").desc)
+    val top = raw.filter(col("validFrom") <= cut)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1 && !col("deleted"))
+      .select("id", "validFrom", "txTime", "doc")
+    val (df, _, rdd) =
+      org.apache.spark.sql.graft.DatasetBridge.materializeWithCount(top, reliable = false)
+    Some(DocumentStore.View(new DocumentStore.Base(vt0, df, rdd), future))
+  }
+
+  /** The current view at `validTime`, with its base, when it answers this
+    * read: no tx-time cut, an open store, and a valid time at or past the
+    * base's (a missing base is built here, as of `validTime` or now). */
+  private def currentAt(validTime: Timestamp, txTime: Timestamp): Option[(DataFrame, DocumentStore.Base)] = {
+    if (txTime.getTime != DocumentStore.MaxTxTime.getTime) return None
+    val vt = validTime.getTime
+    // only a read at or past the last commit builds a base: an older valid
+    // time is a historical read, which the scan answers
+    val v = Option(view).orElse(
+      if (closed || vt < lastTx.get() || System.currentTimeMillis() < noViewUntil) None
+      else lock.synchronized {
+        if (view == null && !closed && System.currentTimeMillis() >= noViewUntil)
+          view = buildView(math.min(vt, now().getTime)).orNull
+        Option(view)
+      })
+    v.filter(x => !closed && vt >= x.base.vt0).map { x =>
+      // delta winners at vt by the as-of order (validFrom, txTime); each
+      // beats its id's base row, which is older on both clocks
+      val winners = x.delta.filter(_.validFrom.getTime <= vt).groupBy(_.id).values
+        .map(_.maxBy(r => (r.validFrom.getTime, r.txTime.getTime))).toSeq
+      val snap =
+        if (winners.isEmpty) x.base.df
+        else {
+          // the superseded ids leave the base inside its own scan: a join
+          // would broadcast them, one more job per read
+          val superseded = winners.map(r => UTF8String.fromString(r.id)).toSet
+          org.apache.spark.sql.graft.DatasetBridge.internalCreate(spark,
+            x.base.rdd.filter(row => !superseded.contains(row.getUTF8String(0))),
+            x.base.df.schema)
+            .unionByName(winners.filterNot(_.deleted)
+              .map(r => (r.id, r.validFrom, r.txTime, r.doc))
+              .toDF("id", "validFrom", "txTime", "doc"))
+        }
+      (snap, x.base)
+    }
+  }
 
   /** Current snapshot (Crux `(db node)`). */
   def db(): DataFrame = asOf(now())
@@ -713,17 +832,34 @@ class DocumentStore(val spark: SparkSession, val path: String) {
       .select(col("id") +: schema.fieldNames.toSeq
         .map(f => col("d").getField(f).as(f)): _*)
 
-  /** Wide relation over a (valid-time, tx-time) snapshot. */
-  def relation(schema: org.apache.spark.sql.types.StructType,
-               validTime: Timestamp, txTime: Timestamp): DataFrame =
-    relationOf(asOf(validTime, txTime), schema)
+  /** EDN Datalog over the (valid-time, tx-time) snapshot, `publicOnly`
+    * dropping ':' ids. Over the current view the join-ranking statistics
+    * come from the same relation over the BASE: its plan is the same on
+    * every request, so the stats pass runs once per base instead of once
+    * per commit (stats only rank joins — no result depends on them). */
+  private def query(edn: String, schema: org.apache.spark.sql.types.StructType,
+                    validTime: Timestamp, txTime: Timestamp,
+                    publicOnly: Boolean): Either[String, DataFrame] = {
+    def scope(df: DataFrame): DataFrame =
+      if (publicOnly) df.filter(!col("id").startsWith(":")) else df
+    currentAt(validTime, txTime) match {
+      case Some((snap, base)) =>
+        val stats = base.statsSources.computeIfAbsent((schema, publicOnly),
+          _ => scope(relationOf(base.df, schema)))
+        graft.query.datalog.EdnDatalog.run(scope(relationOf(snap, schema)), edn,
+          new graft.query.datalog.DatalogCompiler(statsSource = Some(stats)))
+      case None =>
+        graft.query.datalog.EdnDatalog.run(
+          scope(relationOf(scanAsOf(validTime, txTime), schema)), edn)
+    }
+  }
 
   /** The full Crux query surface over this store: an EDN Datalog query
     * against the (valid-time, tx-time) snapshot — `query(vt, tt, q)`
     * (`/root/reference/src/dataworks/db/user_db.clj:33-43`). */
   def q(edn: String, schema: org.apache.spark.sql.types.StructType,
         validTime: Timestamp, txTime: Timestamp): Either[String, DataFrame] =
-    graft.query.datalog.EdnDatalog.run(relation(schema, validTime, txTime), edn)
+    query(edn, schema, validTime, txTime, publicOnly = false)
 
   def q(edn: String, schema: org.apache.spark.sql.types.StructType,
         validTime: Timestamp): Either[String, DataFrame] =
@@ -742,9 +878,7 @@ class DocumentStore(val spark: SparkSession, val path: String) {
     * logically either way). */
   def qPublic(edn: String, schema: org.apache.spark.sql.types.StructType)
       : Either[String, DataFrame] =
-    graft.query.datalog.EdnDatalog.run(
-      relation(schema, now(), DocumentStore.MaxTxTime)
-        .filter(!col("id").startsWith(":")), edn)
+    query(edn, schema, now(), DocumentStore.MaxTxTime, publicOnly = true)
 
   /** Crux `(crux/q (crux/with-tx db ops) query)`: the full EDN Datalog
     * surface over the SPECULATIVE snapshot — the test-before-transact
@@ -794,6 +928,28 @@ object DocumentStore {
     * would overflow the long — the >> 12 keeps the scaled value in range
     * while staying ~71k years in the future. */
   private[store] val MaxTxTime = new Timestamp(Long.MaxValue >> 12)
+
+  /** The materialized base: live top-1 version per id as of `vt0`, as
+    * (id, validFrom, txTime, doc), backed by the locally checkpointed
+    * `rdd`. A tombstone winner is left out: any later version of its id
+    * arrives through the delta and replaces the base row regardless.
+    * `statsSources` memoizes the Datalog stats relation per (schema,
+    * public-only), so the compiler's stats pass runs once per base. */
+  private final class Base(val vt0: Long, val df: DataFrame,
+                           val rdd: org.apache.spark.rdd.RDD[InternalRow]) {
+    val statsSources = new java.util.concurrent.ConcurrentHashMap[
+      (org.apache.spark.sql.types.StructType, Boolean), DataFrame]()
+  }
+  /** Base plus the rows appended since (and rows future-dated at vt0). */
+  private final case class View(base: Base, delta: Vector[VersionedDoc])
+
+  /** Delta rows past which the current view's base is dropped and rebuilt:
+    * each current read scans the delta on the driver and ships its
+    * winners in the plan, so it must stay small. */
+  private[store] val MaxDelta = 1024
+
+  /** Wait before retrying a base that too many future-dated rows refused. */
+  private val ViewRetryMs = 10000L
 
   /** In-JVM holder registry: the pid check below cannot see a second store
     * INSIDE this same process (its pid is alive — ours), so live holders in

@@ -867,8 +867,9 @@ class DatalogDifferentialSpec extends SparkSpec {
     case GPWild => throw new IllegalStateException("expand first")
   }
 
-  private def naivePull(id: String, spec: Seq[GPull]): Any =
-    docsById.get(id) match {
+  private def naivePull(id: String, spec: Seq[GPull],
+                        byId: Map[String, Map[String, Any]] = docsById): Any =
+    byId.get(id) match {
       case None => null
       case Some(doc) =>
         // EQL precedence (mirrors the compiler): explicit entries beat *
@@ -895,14 +896,14 @@ class DatalogDifferentialSpec extends SparkSpec {
             (as.getOrElse(a), if (v == null) dflt.orNull else v)
           case GPJoin(sub) =>
             val ref = doc("manager")
-            ("manager", if (ref == null) null else naivePull(ref.toString, sub))
+            ("manager", if (ref == null) null else naivePull(ref.toString, sub, byId))
           case GPRecur(d) =>
             val ref = doc("manager")
             val sub = childOf(d)
             ("manager",
               if (sub.isEmpty) ref // all-recursive leaf: the raw ref id
               else if (ref == null) null
-              else naivePull(ref.toString, sub))
+              else naivePull(ref.toString, sub, byId))
           case GPWild => throw new IllegalStateException("expand first")
         }
     }
@@ -970,5 +971,44 @@ class DatalogDifferentialSpec extends SparkSpec {
       assert(got == want, s"mismatch for $edn\n  spark-only: ${(got -- want).take(2)}" +
         s"\n  naive-only: ${(want -- got).take(2)}")
     }
+  }
+
+  test("differential: unbounded pull over 5- and 30-deep manager chains unrolls to the true depth") {
+    // Chain discovery probes several levels per job. Each batch must start
+    // one level past the previous batch's last frontier: starting AT it
+    // counted that level twice, so a 5-deep chain unrolled to 6 and a
+    // legal 30-deep chain overflowed MaxDiscoveredDepth. The 5-deep pull
+    // is compared row for row with the naive evaluator; the 30-deep one by
+    // the nesting of its result type (executing 30 unrolled levels costs
+    // minutes and checks nothing the 5-deep rows do not).
+    def chain(depth: Int) = (0 to depth).map(i => DiffEmp(s"c$i", s"n$i", "eng", 1.0, 1L,
+      if (i < depth) s"c${i + 1}" else null))
+    val edn = "{:find [?e (pull ?e [:name {:manager ...}])] :where [[?e :name ?n]]}"
+    def nesting(t: org.apache.spark.sql.types.DataType): Int = t match {
+      case st: org.apache.spark.sql.types.StructType =>
+        st.fields.find(_.name == "manager").fold(0)(f => 1 + nesting(f.dataType))
+      case _ => 0
+    }
+    val failures = Seq(5, 30).flatMap { depth =>
+      val docs = chain(depth)
+      EdnDatalog.run(docs.toDF(), edn) match {
+        case Left(e) => Some(s"depth $depth rejected: $e")
+        case Right(df) =>
+          val levels = nesting(df.schema.fields(1).dataType)
+          if (levels != depth) Some(s"depth $depth unrolled to $levels levels")
+          else if (depth > 5) None
+          else {
+            val byId = docs.map(e => e.id -> Map[String, Any]("id" -> e.id,
+              "name" -> e.name, "manager" -> e.manager)).toMap
+            val want = docs.map(e => (e.id,
+              naivePull(e.id, Seq(GPAttr("name", None, None), GPRecur(depth)), byId))).toSet
+            val got = df.collect().toSeq.map(r => (r.getString(0), canonStruct(r.get(1)))).toSet
+            if (got == want) None
+            else Some(s"depth $depth: spark-only ${(got -- want).take(1)}" +
+              s"\n  naive-only ${(want -- got).take(1)}")
+          }
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

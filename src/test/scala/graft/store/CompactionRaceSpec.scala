@@ -99,6 +99,50 @@ class CompactionRaceSpec extends SparkSpec {
     } finally store.close()
   }
 
+  test("Datalog reads beside repeated compactions answer exactly, never FILE_NOT_EXIST") {
+    // A query that listed the table's files before a compaction's swap and
+    // read them after used to fail with FAILED_READ_FILE.FILE_NOT_EXIST
+    // (an HTTP 500 at a query collector). Current reads now come from the
+    // materialized base, which no compaction touches.
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val store = DocumentStore(spark,
+      Files.createTempDirectory("compact-q").toString + "/db")
+    try {
+      def doc(i: Int) = s"""{"v":$i,"g":"g${i % 5}"}"""
+      store.putAll((1 to 200).map(i => s"d$i" -> doc(i)))
+      (201 to 210).foreach(i => store.put(s"d$i", doc(i)))
+      val schema = StructType(Seq(StructField("v", LongType), StructField("g", StringType)))
+      val edn = "{:find [?g (count ?e) (sum ?v)] :where [[?e :g ?g] [?e :v ?v]]}"
+      val want = (1 to 210).groupBy(i => s"g${i % 5}").map { case (g, is) =>
+        (g, is.size.toLong, is.map(_.toLong).sum) }.toSet
+      def read(): Set[(String, Long, Long)] =
+        store.qPublic(edn, schema).fold(e => throw new IllegalStateException(e),
+          _.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet)
+      assert(read() == want, "answer before any compaction")
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val compactions = new java.util.concurrent.atomic.AtomicInteger(0)
+      val compactErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val compactor = new Thread(() =>
+        try while (!stop.get()) { store.compact(); compactions.incrementAndGet() }
+        catch { case t: Throwable => compactErr.set(t) }, "drill-compactor")
+      compactor.start()
+      val failures = scala.collection.mutable.Buffer.empty[String]
+      try {
+        var reads = 0
+        while (reads < 20 || compactions.get() < 5) {
+          reads += 1
+          try {
+            val got = read()
+            if (got != want) failures += s"read $reads: $got"
+          } catch { case e: Exception => failures += s"read $reads: ${e.getMessage}" }
+        }
+      } finally { stop.set(true); compactor.join(60000) }
+      assert(compactErr.get() == null, s"compaction failed: ${compactErr.get()}")
+      assert(failures.isEmpty,
+        s"${failures.size} reads beside compaction failed: ${failures.headOption.map(_.take(300))}")
+    } finally store.close()
+  }
+
   test("crashed swap: reads fall back to .old; the next compact self-heals") {
     val base = Files.createTempDirectory("compact-crash").toString
     val store = DocumentStore(spark, base + "/db")

@@ -161,6 +161,138 @@ class StorePropertySpec extends SparkSpec {
     }
   }
 
+  /** Ops for the current-view differential: every write shape the store
+    * has, each kind of base invalidation, and time passing scheduled rows. */
+  private sealed trait ViewOp
+  private case class VPut(id: String, v: Int, offsetMs: Option[Long]) extends ViewOp
+  private case class VPutAll(docs: Seq[(String, Int)], offsetMs: Option[Long]) extends ViewOp
+  private case class VDelete(id: String, offsetMs: Option[Long]) extends ViewOp
+  private case class VMatchPut(id: String, expectCurrent: Boolean, v: Int) extends ViewOp
+  private case class VCas(id: String, v: Int) extends ViewOp
+  private case class VPutBatch(docs: Seq[(String, Int)]) extends ViewOp
+  private case object VCompact extends ViewOp
+  private case class VEvict(id: String) extends ViewOp
+  private case class VAdvance(ms: Long) extends ViewOp
+
+  private val viewIds = Seq("a", "b", "c", "d")
+  /** retroactive (< 0), now, scheduled soon (due within a few ops), far future */
+  private val viewOffsets: Seq[Option[Long]] =
+    Seq(None, None, Some(-7200000L), Some(-1L), Some(40L), Some(150L), Some(3600000L))
+
+  private val genViewOp: Gen[ViewOp] = {
+    val id = Gen.oneOf(viewIds)
+    val v = Gen.chooseNum(0, 999)
+    Gen.frequency(
+      6 -> (for (i <- id; x <- v; off <- Gen.oneOf(viewOffsets)) yield VPut(i, x, off)),
+      2 -> (for {
+        n <- Gen.chooseNum(2, 4)
+        ds <- Gen.listOfN(n, Gen.zip(id, v)) // duplicates: the last one wins
+        off <- Gen.oneOf(None, Some(90L))
+      } yield VPutAll(ds, off)),
+      2 -> (for (i <- id; off <- Gen.oneOf(None, None, Some(-1L), Some(60L))) yield VDelete(i, off)),
+      2 -> (for (i <- id; e <- Gen.oneOf(true, false); x <- v) yield VMatchPut(i, e, x)),
+      1 -> (for (i <- id; x <- v) yield VCas(i, x)),
+      1 -> (for (is <- Gen.someOf(viewIds); x <- v) yield VPutBatch(is.toSeq.map(_ -> x))),
+      1 -> Gen.const(VCompact),
+      1 -> id.map(VEvict(_)),
+      2 -> Gen.oneOf(50L, 200L).map(VAdvance(_)))
+  }
+
+  test("differential: the current view (db, asOf at or past now) after every op, against the scan and the model") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import spark.implicits._
+    def rows(df: DataFrame): Map[String, String] =
+      df.select("id", "doc").as[(String, String)].collect().toMap
+    for ((seed, nOps) <- Seq((31L, 20), (4242L, 20))) {
+      val store = DocumentStore(spark,
+        java.nio.file.Files.createTempDirectory(s"store-view-$seed").toString + "/db")
+      try {
+        var model = Vector.empty[Version]
+        var viewReads = 0
+        var reads = 0
+        def lastTx(): Long = store.latestSubmittedTx.get.getTime
+        def current(id: String) = visible(model, id, store.now().getTime, Long.MaxValue)
+        // the model's snapshot, grouped first: the bulk write makes ~1k ids
+        def want(vt: Long): Map[String, String] = model.groupBy(_.id).flatMap { case (id, vs) =>
+          vs.filter(_.validFrom <= vt).maxByOption(v => (v.validFrom, v.txTime))
+            .filterNot(_.deleted).map(id -> _.doc)
+        }
+        def doc(v: Int) = s"""{"v":$v}"""
+        val ops = samples(genViewOp, nOps, seed).toVector
+        // one bulk write past the delta's bound mid-sequence, and one of
+        // future-dated rows at the end: too many to carry, so the next base
+        // is refused and the last reads take the scan
+        def bulk(tag: String, off: Option[Long]) =
+          VPutAll((1 to DocumentStore.MaxDelta + 5).map(i => s"$tag$i" -> i), off)
+        val seq = ops.take(nOps / 2) ++ Seq(bulk("bulk", None)) ++ ops.drop(nOps / 2) ++
+          Seq(bulk("later", Some(3600000L)), VPut("a", 1, None))
+        for ((op, step) <- seq.zipWithIndex) {
+          def vf(off: Option[Long]) = off.map(o => new Timestamp(store.now().getTime + o))
+          op match {
+            case VPut(id, v, off) =>
+              val f = vf(off); val tx = store.put(id, doc(v), f)
+              model :+= Version(id, f.getOrElse(tx).getTime, tx.getTime, deleted = false, doc(v))
+            case VPutAll(ds, off) =>
+              val f = vf(off); val tx = store.putAll(ds.map { case (i, v) => i -> doc(v) }, f)
+              ds.groupBy(_._1).foreach { case (i, vs) =>
+                model :+= Version(i, f.getOrElse(tx).getTime, tx.getTime, deleted = false, doc(vs.last._2)) }
+            case VDelete(id, off) =>
+              val f = vf(off); val tx = store.delete(id, f)
+              model :+= Version(id, f.getOrElse(tx).getTime, tx.getTime, deleted = true, null)
+            case VMatchPut(id, expectCurrent, v) =>
+              val cur = current(id)
+              val expected = if (expectCurrent) cur else cur.map(_ + "-stale")
+              val committed = store.matchPut(id, expected, doc(v))
+              // a scheduled row falling due during the call may move "current"
+              if (current(id) == cur)
+                assert(committed == (expected == cur), s"matchPut decided wrong for $id [seed $seed]")
+              if (committed) model :+= Version(id, lastTx(), lastTx(), deleted = false, doc(v))
+            case VCas(id, v) =>
+              current(id).foreach { cur =>
+                val committed = store.cas(id, cur, doc(v))
+                if (current(id) == Some(cur))
+                  assert(committed, s"cas refused the current doc of $id [seed $seed]")
+                if (committed) model :+= Version(id, lastTx(), lastTx(), deleted = false, doc(v))
+              }
+            case VPutBatch(ds) =>
+              if (ds.nonEmpty) {
+                val tx = store.putBatch(ds.map { case (i, v) => (i, doc(v)) }.toDF("id", "doc"))
+                ds.foreach { case (i, v) =>
+                  model :+= Version(i, tx.getTime, tx.getTime, deleted = false, doc(v)) }
+              }
+            case VCompact => store.compact()
+            case VEvict(id) =>
+              store.evict(id); model = model.filterNot(_.id == id)
+            case VAdvance(ms) => Thread.sleep(ms)
+          }
+          // db(): equal to the model at a valid time inside the call
+          val before = store.now().getTime
+          val dbRows = rows(store.db())
+          val after = store.now().getTime
+          assert(dbRows == want(before) || dbRows == want(after),
+            s"db() diverged after step $step ($op) [seed $seed]:\n got $dbRows\n want ${want(after)}")
+          // asOf at now and past every scheduled row: model AND scan path
+          for (vt <- Seq(after, after + 7200000L)) {
+            val t = new Timestamp(vt)
+            val df = store.asOf(t)
+            reads += 1
+            if (df.queryExecution.analyzed.collectFirst { case r: LogicalRelation => r }.isEmpty)
+              viewReads += 1
+            val got = rows(df)
+            assert(got == want(vt),
+              s"asOf($vt) diverged from the model after step $step ($op) [seed $seed]:\n" +
+                s" got $got\n want ${want(vt)}")
+            assert(got == rows(store.scanAsOf(t, DocumentStore.MaxTxTime)),
+              s"asOf($vt) diverged from the scan after step $step ($op) [seed $seed]")
+          }
+        }
+        // the view, not the scan, answered most of those reads
+        assert(viewReads * 2 > reads, s"only $viewReads of $reads current reads used the view")
+      } finally store.close()
+    }
+  }
+
   /** Speculative-op generator for the withTx differential: puts/deletes
     * over the committed ids PLUS fresh ids (a speculative create must
     * surface), some at a future valid time (S2 scheduled visibility must

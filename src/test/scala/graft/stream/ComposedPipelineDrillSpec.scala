@@ -128,8 +128,13 @@ class ComposedPipelineDrillSpec extends SparkSpec {
     // pattern is deadline polling — IngestPipelineSpec). A publish's rows
     // are guaranteed processed once TWO more batches complete: the batch
     // in flight at publish time may miss them; the next one cannot.
+    // Batch ids CONTINUE across a restart, so the last batch completed
+    // before a stop stays a floor for the restarted query: until the new
+    // query reports progress its lastProgress is null, and a clean restart
+    // may have no batch to replay at all.
+    var resumeFloor = -1L
     def lastBatch(q: StreamingQuery): Long =
-      Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
+      math.max(resumeFloor, Option(q.lastProgress).map(_.batchId).getOrElse(-1L))
     def awaitBatch(q: StreamingQuery, target: Long): Unit = {
       val deadline = System.currentTimeMillis() + 120000
       while (lastBatch(q) < target && System.currentTimeMillis() < deadline)
@@ -148,21 +153,19 @@ class ComposedPipelineDrillSpec extends SparkSpec {
           s"$src$b" ->
             s"""{"src":"$src","uid":"$src-$b","text":"${textFor(src, b)}"}"""))
         awaitBatch(q, at + 2)
-        // After a restart the new query's lastProgress is null until its
-        // first batch completes, so the loop's `at = lastBatch(q)` would
-        // read -1 and `awaitBatch(at + 2)` would be satisfied by the
-        // checkpoint-replay batch ALONE — the next two publish rounds can
-        // then merge into one micro-batch (observed once under a slow
-        // host window: 39/40 distinct data batches, the id gap exactly at
-        // the kill point). Batch ids CONTINUE across a restart, so waiting
-        // for the pre-stop id to complete re-establishes real progress
-        // before the next round publishes.
+        // Without the floor, the round after a restart would read `at` as
+        // -1 and `awaitBatch(at + 2)` would be satisfied by the checkpoint-
+        // replay batch ALONE — the next two publish rounds could then merge
+        // into one micro-batch (observed once under a slow host window:
+        // 39/40 distinct data batches, the id gap exactly at the kill
+        // point). With it, the round waits for two batches past the pre-
+        // stop id whether or not the restart replays one, and nothing
+        // waits on a replay that a clean stop never leaves behind.
         def restart(mutate: => Unit = ()): Unit = {
-          val resumeFrom = lastBatch(q)
+          resumeFloor = lastBatch(q)
           q.stop()
           mutate
           q = startIngest()
-          awaitBatch(q, resumeFrom)
         }
         if (b == 20) restart() // KILL mid-run; restart resumes from the checkpoint
         if (b == 35) restart { // HOT-SWAP: semantics-preserving spec rewrite
