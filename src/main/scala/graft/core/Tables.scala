@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   *
@@ -10,10 +12,54 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partition pruning for free (SURVEY.md §4). At 100 TB these reads are the
   * scan layer: filters/projections issued on the returned DataFrame reach the
   * parquet reader (verify via `.explain`'s PushedFilters/ReadSchema).
+  *
+  * A bare `spark.read.parquet` runs a one-task schema-inference job on every
+  * call. A fixture file's schema is therefore inferred once per file version
+  * (qualified path, length, modification time, and the session confs that
+  * change parquet inference) and passed to later reads, so building a
+  * DataFrame over a fixture starts no job. Only the schema is reused: the
+  * files are still listed on every read, so a rewritten fixture is seen at
+  * once. A directory keeps the plain read, because its modification time
+  * does not track the files inside it.
   */
 object Tables {
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val MaxSchemas = 256
+
+  /** Session confs whose values change what parquet schema inference yields. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private case class FileVersion(path: String, length: Long, modified: Long,
+                                 confs: Seq[Option[String]])
+
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[FileVersion, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[FileVersion, StructType]): Boolean = size > MaxSchemas
+    })
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val status =
+      try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.filter(_.isFile) match {
+      case None => spark.read.parquet(path) // a directory, or Spark's own missing-path error
+      case Some(st) =>
+        val key = FileVersion(st.getPath.toString, st.getLen, st.getModificationTime,
+          InferenceConfs.map(spark.conf.getOption))
+        val schema = Option(schemas.get(key)).getOrElse {
+          val inferred = spark.read.parquet(path).schema
+          schemas.put(key, inferred)
+          inferred
+        }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

@@ -429,6 +429,8 @@ object TextOps {
   def bm25TopK(docs: DataFrame, queryTerms: Seq[String], k: Int = 50,
                textCol: String = "text"): DataFrame = {
     require(queryTerms.nonEmpty, "bm25TopK: query terms must be non-empty")
+    // a query is a set of terms: a repeated term scores once, not once per slot
+    val terms = queryTerms.distinct
     val toksArr = filter(tokens(col(textCol)), t => length(t) > 0)
     // one tokenization serves dl AND every per-term tf — all map-side, and
     // the per-term tfs land in ONE fixed-width long array per doc (r17):
@@ -444,7 +446,7 @@ object TextOps {
       Strata.spreadById(docs, "doc_id")
         .select(col("doc_id"), toksArr.as("toks"))
         .select(col("doc_id"), size(col("toks")).as("dl"),
-          array(queryTerms.map(t =>
+          array(terms.map(t =>
             size(filter(col("toks"), x => x === lit(t))).cast("long")): _*)
             .as("tfs")))
     // corpus stats AND per-term document frequencies in ONE single-row
@@ -455,7 +457,7 @@ object TextOps {
     val aggCols =
       count(when(col("dl") > 0, lit(1))).as("n") +:
         sum(when(col("dl") > 0, col("dl"))).as("t") +:
-        queryTerms.indices.map(i =>
+        terms.indices.map(i =>
           sum(when(col("tfs")(i) > 0, lit(1L)).otherwise(lit(0L))).as(s"df_$i"))
     val stats = thin.agg(aggCols.head, aggCols.tail: _*)
     val avgdl = col("t").cast("double") / col("n").cast("double")
@@ -463,7 +465,7 @@ object TextOps {
     // tfs — no (doc,term) rows, no groupBy(doc_id) exchange): the q6
     // contributions sum left-to-right in term order; integer addition is
     // order-free, so totals equal the old sum-over-shuffled-rows exactly.
-    val scoreCols = queryTerms.indices.map { i =>
+    val scoreCols = terms.indices.map { i =>
       val tfL = col("tfs")(i)
       val tfD = tfL.cast("double")
       val dfI = col(s"df_$i")

@@ -31,10 +31,6 @@ object Functions {
     floor(c * p + lit(0.5)) / p
   }
 
-  /** The DuckDB-side spelling of [[stableRound]] for oracle SQL. */
-  def stableRoundSql(expr: String, scale: Int): String =
-    s"floor(($expr) * 1e$scale + 0.5) / 1e$scale"
-
   /** `:never` sentinel — sorts after every real instant
     * (`time.clj`'s :never arm; used by alert scheduling). */
   val Never: Instant = Instant.ofEpochMilli(Long.MaxValue >> 12)
@@ -124,9 +120,6 @@ object Functions {
     consumeTime(value, now).map(i => i.toEpochMilli - now.toEpochMilli)
 
   // ------------------------------------------------------ column-level (X1-X4)
-
-  /** X3: truncate-to-unit — `date_trunc` (codegen'd). */
-  def truncateTo(ts: Column, unit: String): Column = date_trunc(unit, ts)
 
   /** X4: next-or-SAME day-of-week at midnight (`consume-time`'s DayOfWeek
     * arm tests today BEFORE advancing, time.clj:70-73). Spark's `next_day`

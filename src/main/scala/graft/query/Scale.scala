@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Scale-out utilities for the 100 TB posture (SURVEY.md §7.4 risk 6 and
   * the build contract's "partitioning & shuffle" directives): skew salting,
-  * bucketed layout, and partitioned writes. These are the knobs a
+  * bucketed layout, and sized and Z-ordered writes. These are the knobs a
   * 1000-executor deployment turns that local[32] never needs — shipped and
   * tested so the cluster path is code, not folklore.
   */
@@ -56,15 +56,6 @@ object Scale {
       .agg(sum("__c").as("n_items"),
         sum("__q").cast("double").as("sum_qty"))
 
-  /** Write a DataFrame bucketed+sorted so later equi-joins on `key` are
-    * co-located (no shuffle): Spark bucketing requires saveAsTable. */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-                    buckets: Int, sortCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite").bucketBy(buckets, key)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .format("parquet").saveAsTable(table)
-  }
-
   /** Target-file-size writer — the small-files antidote. A 100 TB corpus
     * written at the upstream task count lands as millions of KB-files
     * (every reader pays a task per file and the namenode pays the
@@ -86,12 +77,6 @@ object Scale {
     df.repartition(files).write.mode("overwrite").parquet(path)
     files
   }
-
-  /** Partition-pruned layout for time-series facts: one directory per
-    * date — as-of/time-range reads touch only their partitions. */
-  def writeDatePartitioned(df: DataFrame, path: String, tsCol: String): Unit =
-    df.withColumn("__date", to_date(col(tsCol)))
-      .write.mode("overwrite").partitionBy("__date").parquet(path)
 
   /** Broadcast-threshold-aware join helper: broadcasts the dimension when
     * its size estimate is under the session threshold, otherwise lets AQE

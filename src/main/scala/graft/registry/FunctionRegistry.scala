@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.concurrent.{ExecutionContext, Future}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Named-function registry (F1/F2, SURVEY.md §2.4): the hot-swappable
   * transformer/transactor surface. The reference keeps eval'd functions in
@@ -41,11 +41,6 @@ class FunctionRegistry {
     { columnFns.put(name, f); () }
   def columnFn(name: String): Option[Seq[Column] => Column] =
     Option(columnFns.get(name))
-
-  /** Register a scalar as a Spark SQL UDF too, so op-spec expression
-    * strings can call it by name (the `transformers`-macro splice analog). */
-  def registerUdf1(spark: SparkSession, name: String, f: String => String): Unit =
-    spark.udf.register(name, f)
 
   def registerTransactor(name: String, f: Seq[String] => Unit): Unit =
     { transactors.put(name, f); () }

@@ -312,19 +312,27 @@ class MemoryIO(val spark: SparkSession) extends StreamIO {
     sources.computeIfAbsent(topic, _ => MemoryStream[(String, String, Timestamp)])
   }
 
+  /** `MemoryStream.addData` serializes rows with one shared encoder before
+    * it takes its own lock, so concurrent pushes to one topic can lose,
+    * repeat or garble rows. Pushes to a topic therefore go one at a time. */
+  private def add(topic: String, rows: Seq[(String, String, Timestamp)]): Unit = {
+    val s = stream(topic)
+    s.synchronized { s.addData(rows); () }
+  }
+
   /** Push a message into a source topic (test harness side of T16). */
   def publish(topic: String, key: String, value: String): Unit =
-    stream(topic).addData((key, value, new Timestamp(System.currentTimeMillis())))
+    add(topic, Seq((key, value, new Timestamp(System.currentTimeMillis()))))
 
   /** Push with an explicit event time (drives watermark/window tests). */
   def publishAt(topic: String, key: String, value: String, ts: Timestamp): Unit =
-    stream(topic).addData((key, value, ts))
+    add(topic, Seq((key, value, ts)))
 
   /** Push many messages as ONE block (= one input partition in the next
     * micro-batch) — lets tests overflow a bounded buffer deterministically. */
   def publishBatch(topic: String, kvs: Seq[(String, String)]): Unit = {
     val now = new Timestamp(System.currentTimeMillis())
-    stream(topic).addData(kvs.map { case (k, v) => (k, v, now) })
+    add(topic, kvs.map { case (k, v) => (k, v, now) })
   }
 
   /** Collected sink rows for a topic (in arrival order). Reads take the
