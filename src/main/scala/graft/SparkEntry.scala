@@ -31,8 +31,9 @@ object SparkEntry {
     "join_equi"           -> (Relational.joinEqui(_, _)),
     "join_multiway"       -> (Relational.joinMultiway(_, _)),
     "join_anti"           -> (Relational.joinAnti(_, _)),
-    "join_asof"           -> (Relational.asofJoinQuery(_, _)),
-    "join_asof_native"    -> (graft.plans.AsOfJoin.asofJoinNativeQuery(_, _)),
+    // one query body, kept under both gate names
+    "join_asof"           -> (graft.plans.AsOfJoin.asofJoinQuery(_, _)),
+    "join_asof_native"    -> (graft.plans.AsOfJoin.asofJoinQuery(_, _)),
     "scale_salted_agg"    -> (graft.query.Scale.saltedAggQuery(_, _)),
     "scale_zorder"        -> (graft.query.Scale.zorderQuery(_, _)),
     "scale_bucketed_join" -> (graft.query.Scale.bucketedJoinQuery(_, _)),
@@ -709,8 +710,8 @@ object SparkEntry {
           AND epoch_us(CAST(l.l_shipdate AS TIMESTAMP)) < epoch_us(CAST(o.o_orderdate AS TIMESTAMP)) + 1209600000000
          WHERE o.o_orderpriority = '1-URGENT' AND o.o_orderkey % 100 = 7
          GROUP BY o.o_orderkey""",
-    // join_asof_native: the same semantics through the custom Catalyst
-    // operator (plans.AsOfJoinExec) — one oracle, two execution paths
+    // join_asof_native: the same query as join_asof (plans.AsOfJoinExec),
+    // kept under its own name — the same oracle
     "join_asof_native" ->
       """SELECT p.event_id, p.user_id, c.click_id AS asof_click_id
          FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events WHERE event_type = 'purchase') p

@@ -99,17 +99,6 @@ object Dedup {
 
   // --------------------------------------------------------------- MinHash
 
-  /** MinHash signature: numPerm independent min-hashes over word shingles.
-    * Permutation p is (a_p·md5₂₈(shingle)+b_p) mod (2³¹−1) — exact int64
-    * arithmetic a DuckDB oracle replays bit-identically (seeded murmur
-    * would force the gate down to rows-only); shingling + signature are
-    * single-pass native expressions. */
-  def minhashSignature(text: Column, shingleN: Int = 3,
-                       numPerm: Int = 64): Column = {
-    val sh = graft.functions.TextHashExpressions.word_shingles(TextOps.tokens(text), shingleN)
-    graft.functions.TextHashExpressions.minhash_sig(sh, numPerm)
-  }
-
   /** LSH banding: split the signature into `bands` bands of `rows` hashes;
     * each band hashes to a bucket key. Docs sharing ANY band bucket are
     * candidate near-dups. Returns (id, band, bucket). */

@@ -35,13 +35,6 @@ object TextOps {
     size(filter(split(text, "(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
       t => length(trim(t)) > 0))
 
-  /** Character n-gram array (for language ID / fingerprinting). */
-  def charNgrams(text: Column, n: Int): Column = {
-    val t = lower(text)
-    transform(sequence(lit(1), greatest(length(t) - (n - 1), lit(1))),
-      i => t.substr(i, lit(n)))
-  }
-
   /** Word n-gram (shingle) array with a join character. */
   def wordShingles(toks: Column, n: Int): Column =
     when(size(toks) < n, array(concat_ws(" ", toks)))

@@ -16,7 +16,7 @@ import org.apache.spark.sql.graft.DatasetBridge
   * `SparkPlan`, registered via `SparkSessionExtensions`
   * (graft.GraftExtensions) or per-session `experimental.extraStrategies`.
   *
-  * Semantics (inner as-of, matching `Relational.asofJoin` and DuckDB's
+  * Semantics (inner as-of, matching DuckDB's
   * `ASOF JOIN ... ON l.key = r.key AND l.ts >= r.ts`): for every left row,
   * the single latest right row with the same key and `rightTime <=
   * leftTime`; left rows with no prior right row are dropped.
@@ -26,9 +26,9 @@ import org.apache.spark.sql.graft.DatasetBridge
   * then a single forward-only merge pass per partition: O(left + right)
   * with O(1) state (the last matching carry row), no join explosion on hot
   * keys, no window buffering. This is the plan a 100 TB event-attribution
-  * join wants: the union+window formulation (`Relational.asofJoin`) sorts
-  * left AND right rows through one window; this operator never materializes
-  * right rows into the output sort at all.
+  * join wants: a union+window formulation sorts left AND right rows through
+  * one window; this operator never materializes right rows into the
+  * output sort at all. It is the library's one batch as-of join.
   */
 /** Match direction: Backward = latest right row with rightTime <= leftTime
   * (the default, DuckDB/kdb semantics); Forward = earliest right row with
@@ -122,8 +122,7 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
   // (key, time) sort inside each partition — EnsureRequirements adds the
   // sorts. The right side additionally orders by the (orderable) carry
   // columns, so ties on (key, time) resolve deterministically: backward
-  // keeps the LAST row (max carry tuple — matching the window
-  // formulation's last-over-ascending pick), forward the FIRST (min).
+  // keeps the LAST row (max carry tuple), forward the FIRST (min).
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
     Seq(SortOrder(leftKey, Ascending), SortOrder(leftTime, Ascending)),
     Seq(SortOrder(rightKey, Ascending), SortOrder(rightTime, Ascending)) ++
@@ -342,9 +341,11 @@ object AsOfJoin {
     DatasetBridge.ofRows(spark, projected)
   }
 
-  /** Gate query: identical semantics (and DuckDB ASOF JOIN oracle) to
-    * `Relational.asofJoinQuery`, executed through [[AsOfJoinExec]]. */
-  def asofJoinNativeQuery(s: SparkSession, d: String): DataFrame = {
+  /** Gate query (`join_asof`, `join_asof_native`): for every purchase
+    * event, the user's latest preceding (or simultaneous) click — oracle:
+    * DuckDB's native ASOF JOIN. Clicks are deduplicated per (user, ts) by
+    * max event_id so ties are deterministic. */
+  def asofJoinQuery(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, max}
     val ev = graft.core.Tables.events(s, d)
     val purchases = ev.filter(col("event_type") === "purchase")

@@ -141,41 +141,36 @@ object Fixpoint {
     derived.join(accR, cond, "left_anti")
   }
 
-  private def nonConverged(what: String, maxIter: Int): Nothing =
-    throw new IllegalStateException(
-      s"$what did not converge within maxIter=$maxIter iterations — " +
-        "the result would be silently incomplete; raise maxIter")
-
-  /** Transitive closure of `edges(src, dst)` → all reachable `(src, dst)`.
-    * Delegates to the shared loop ([[fixpointFrom]]) — this used to be a
-    * hand-mirrored copy of fixpoint2's loop, and a fix to one (the
-    * null-key convergence fix was exactly this class) had to be ported to
-    * the other by hand. */
+  /** Transitive closure of `edges(src, dst)` → all reachable `(src, dst)`:
+    * a one-member [[fixpointMulti]] whose step extends the frontier by one
+    * edge. */
   def transitiveClosure(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val e0 = materialize(edges.select("src", "dst").distinct())
-    fixpointFrom(e0, (delta, _) =>
-      delta.as("d")
-        .join(e0.df.as("g"), col("d.dst") === col("g.src"))
-        .select(col("d.src").as("src"), col("g.dst").as("dst")),
-      Seq("src", "dst"), maxIter, "transitiveClosure")
+    // round 1's frontier IS the base — the edge set, distinct and
+    // materialized — so every round joins against it and none re-reads
+    // the source (materializing it here first would cost one more job)
+    var edgeSet: Option[DataFrame] = None
+    fixpointMulti(Map("tc" -> edges.select("src", "dst")), (deltas, _) =>
+      deltas.map { case (n, d) =>
+        val g = edgeSet.getOrElse { edgeSet = Some(d); d }
+        n -> d.as("d").join(g.as("g"), col("d.dst") === col("g.src"))
+          .select(col("d.src").as("src"), col("g.dst").as("dst"))
+      }, Map("tc" -> Seq("src", "dst")), maxIter)("tc")
   }
 
-  /** General semi-naive fixpoint: `step(delta)` derives new tuples from the
-    * latest frontier; iteration stops when nothing new appears. `keys` are
-    * the dedup columns (rule-head variables — Datalog set semantics). */
-  def fixpoint(base: DataFrame, step: DataFrame => DataFrame,
-               keys: Seq[String], maxIter: Int = 50): DataFrame =
-    fixpoint2(base, (delta, _) => step(delta), keys, maxIter)
-
-  /** Multi-relation semi-naive fixpoint — the evaluation engine for a
-    * strongly-connected component of MUTUALLY recursive Datalog rules
-    * (Q9 extension; crux permits them via `src/dataworks/db/user_db.clj:33-43`'s
-    * arbitrary rule vectors). Each member relation keeps its own
-    * (accumulator, frontier); one iteration derives every member's new
-    * tuples from the CURRENT frontiers + accumulators, then advances all
-    * frontiers together. Terminates when every frontier is empty in the
+  /** Semi-naive fixpoint over the members of a recursive Datalog rule
+    * component — one self-recursive rule is a component of one member;
+    * MUTUALLY recursive rules (Q9 extension; crux permits them via
+    * `src/dataworks/db/user_db.clj:33-43`'s arbitrary rule vectors) are
+    * several. Each member relation keeps its own (accumulator, frontier);
+    * one iteration derives every member's new tuples from the CURRENT
+    * frontiers + accumulators, then advances all frontiers together. The
+    * step sees both so NONLINEAR bodies can join a frontier against an
+    * accumulator — delta⋈delta alone would lose derivations pairing a new
+    * tuple with an old one. Terminates when every frontier is empty in the
     * same round — per-member termination would be wrong, since an empty
-    * round for P can be followed by new P-tuples derived through Q.
+    * round for P can be followed by new P-tuples derived through Q. The
+    * first round's frontiers are the bases, distinct and materialized; an
+    * empty base is converged before any round runs.
     *
     * `bases` may omit members with no non-recursive body: such a member's
     * relation (and schema) materializes the first time a rule derives into
@@ -184,9 +179,12 @@ object Fixpoint {
     * definition). Members still absent at convergence genuinely ARE the
     * empty relation — the caller supplies its own empty stand-in.
     *
-    * Scale shape matches [[fixpoint2]]: per-member checkpointed delta legs,
-    * flat-union accumulators (O(|delta|) per round, never O(|acc|)),
-    * `<=>`-anti-join freshness, one materialize job per member per round. */
+    * Scale shape: `keys` are each member's dedup columns (rule-head
+    * variables — Datalog set semantics); per-member checkpointed delta
+    * legs, flat-union accumulators (O(|delta|) per round, never O(|acc|)),
+    * `<=>`-anti-join freshness, one materialize job per member per round,
+    * each submitted from the caller's thread so it runs in the caller's
+    * Spark job group (a `:timeout` cancels it, and nothing else). */
   def fixpointMulti(
       bases: Map[String, DataFrame],
       step: (Map[String, DataFrame], Map[String, DataFrame]) => Map[String, DataFrame],
@@ -200,108 +198,38 @@ object Fixpoint {
     val spark = bases.head._2.sparkSession
     case class St(legs: Vector[RDD[InternalRow]], schema: StructType, acc: DataFrame)
     var states = Map.empty[String, St]
+    // a member's first leg fixes its schema; later legs are cast to it
+    def grow(n: String, m: Mat): Unit = {
+      val prev = states.get(n)
+      val schema = prev.fold(relaxed(m.df.schema))(_.schema)
+      val legs = prev.fold(Vector.empty[RDD[InternalRow]])(_.legs) :+ m.rdd
+      states += n -> St(legs, schema, fromLegs(spark, legs, schema))
+    }
     var deltas = Map.empty[String, DataFrame]
     bases.foreach { case (n, df) =>
       val m = materialize(df.select(keys(n).map(col): _*).distinct())
-      val schema = relaxed(m.df.schema)
-      states += n -> St(Vector(m.rdd), schema, fromLegs(spark, Seq(m.rdd), schema))
+      grow(n, m)
       if (m.rows > 0) deltas += n -> states(n).acc
     }
     var i = 0
-    var done = deltas.isEmpty
-    while (!done && i < maxIter) {
-      val accs = states.map { case (n, s) => n -> s.acc }
-      val derived = step(deltas, accs)
-      derived.keys.foreach(n => require(keys.contains(n),
-        s"fixpointMulti: step derived into unknown member '$n' " +
-          s"(keys are ${keys.keys.toSeq.sorted.mkString(", ")})"))
-      // materialize the members' rounds CONCURRENTLY: each is an
-      // independent blocking Spark job reading only round-start state, so
-      // submitting them from one thread serializes the cluster round to
-      // |SCC| × single-member latency for no reason
-      val freshes: Seq[(String, Mat)] = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext = memberEc
-        Await.result(Future.traverse(derived.toSeq) { case (n, df) =>
-          Future {
-            val pruned = df.select(keys(n).map(col): _*).distinct()
-            n -> (states.get(n) match {
-              case Some(s) =>
-                materialize(antiAlreadySeen(alignTo(pruned, s.schema), s.acc, keys(n)))
-              case None => materialize(pruned)
-            })
-          }
-        }, Duration.Inf)
+    while (deltas.nonEmpty && i < maxIter) {
+      // every derived frame reads round-start state only, so growing one
+      // member's accumulator below cannot leak into another's round
+      val derived = step(deltas, states.map { case (n, s) => n -> s.acc })
+      deltas = derived.flatMap { case (n, df) =>
+        require(keys.contains(n), s"fixpointMulti: step derived into unknown member " +
+          s"'$n' (keys are ${keys.keys.toSeq.sorted.mkString(", ")})")
+        val pruned = df.select(keys(n).map(col): _*).distinct()
+        val fresh = states.get(n).fold(materialize(pruned))(s =>
+          materialize(antiAlreadySeen(alignTo(pruned, s.schema), s.acc, keys(n))))
+        if (fresh.rows == 0L) None
+        else { grow(n, fresh); Some(n -> fresh.df) }
       }
-      var next = Map.empty[String, DataFrame]
-      freshes.foreach { case (n, fresh) =>
-        if (fresh.rows > 0) {
-          val st = states.get(n) match {
-            case Some(s) =>
-              val legs = s.legs :+ fresh.rdd
-              St(legs, s.schema, fromLegs(spark, legs, s.schema))
-            case None =>
-              val schema = relaxed(fresh.df.schema)
-              St(Vector(fresh.rdd), schema, fromLegs(spark, Seq(fresh.rdd), schema))
-          }
-          states += n -> st
-          next += n -> fresh.df
-        }
-      }
-      deltas = next
-      done = next.isEmpty
       i += 1
     }
-    if (!done) nonConverged("fixpointMulti", maxIter)
+    if (deltas.nonEmpty) throw new IllegalStateException(
+      s"fixpoint did not converge within maxIter=$maxIter iterations — " +
+        "the result would be silently incomplete; raise maxIter")
     states.map { case (n, s) => n -> s.acc }
-  }
-
-  /** Small daemon pool for per-member round materializations (SCCs are
-    * 2-3 members; Spark job submission is thread-safe). */
-  private lazy val memberEc = scala.concurrent.ExecutionContext.fromExecutorService(
-    java.util.concurrent.Executors.newFixedThreadPool(4, r => {
-      val t = new Thread(r, "graft-fixpoint-member"); t.setDaemon(true); t
-    }))
-
-  /** Semi-naive fixpoint whose step sees BOTH the frontier and the full
-    * accumulator — required for NONLINEAR recursion (a rule body with two
-    * self-references must join delta against acc, not only delta against
-    * delta, or derivations pairing a new tuple with an old one are lost). */
-  def fixpoint2(base: DataFrame, step: (DataFrame, DataFrame) => DataFrame,
-                keys: Seq[String], maxIter: Int = 50): DataFrame = {
-    require(keys.nonEmpty, "fixpoint needs at least one dedup key column")
-    fixpointFrom(materialize(base.select(keys.map(col): _*).distinct()),
-      step, keys, maxIter, "fixpoint")
-  }
-
-  /** The ONE semi-naive loop body, from a pre-materialized base. An empty
-    * base is trivially converged (no round runs — previously an empty edge
-    * set still paid a full join + anti-join + materialize round, and
-    * maxIter=0 on it threw nonConverged where fixpointMulti returned). */
-  private def fixpointFrom(first: Mat, step: (DataFrame, DataFrame) => DataFrame,
-                           keys: Seq[String], maxIter: Int,
-                           what: String): DataFrame = {
-    val spark = first.df.sparkSession
-    val schema = relaxed(first.df.schema)
-    var legs = Vector(first.rdd)
-    var acc = fromLegs(spark, legs, schema)
-    var delta = acc
-    var i = 0
-    var done = first.rows == 0L
-    while (!done && i < maxIter) {
-      val fresh = materialize(antiAlreadySeen(
-        alignTo(step(delta, acc).select(keys.map(col): _*).distinct(), schema),
-        acc, keys))
-      if (fresh.rows == 0L) done = true
-      else {
-        legs :+= fresh.rdd
-        acc = fromLegs(spark, legs, schema)
-        delta = fresh.df
-      }
-      i += 1
-    }
-    if (!done) nonConverged(what, maxIter)
-    acc
   }
 }

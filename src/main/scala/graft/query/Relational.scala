@@ -421,77 +421,6 @@ object Relational {
       .select(col("user_id"), col("event_id"), col("op"))
   }
 
-  /** As-of (point-in-time) join — for each left row, the single latest
-    * right row with the same key and `rightTs <= leftTs`. Spark ships no
-    * built-in ASOF JOIN (this library's [[graft.plans.AsOfJoin]] custom
-    * operator is the other path — same oracle); the naive theta-join +
-    * window is O(matches) and
-    * skew-prone. This is the scalable formulation: tag and UNION both
-    * sides, one window over (key, ts) propagating the last-seen right row
-    * (`last(_, ignoreNulls)`), then keep left rows — exactly ONE shuffle
-    * on the key, no join explosion, same technique at any scale.
-    * Right rows sort before left rows on ts ties (inclusive semantics,
-    * matching DuckDB's `ON l.ts >= r.ts`). Left rows with no prior right
-    * row are dropped (inner as-of). */
-  def asofJoin(left0: DataFrame, right0: DataFrame, key: String,
-               leftTs: String, rightTs: String,
-               carry: Seq[String]): DataFrame = {
-    // SQL as-of semantics (DuckDB `ON l.key = r.key AND l.ts >= r.ts`):
-    // null keys/timestamps never match. Without this filter a null-ts right
-    // row sorts NULLS FIRST in the window and is carried as an
-    // earlier-than-everything match, and null keys match each other.
-    val left = left0.filter(col(key).isNotNull && col(leftTs).isNotNull)
-    val right = right0.filter(col(key).isNotNull && col(rightTs).isNotNull)
-    val leftCols = left.columns.toSeq
-    // carries travel as ONE non-null struct per right row, so
-    // `last(_, ignoreNulls)` selects the latest MATCHED ROW even when the
-    // carried values themselves are null — per-column last() would skip a
-    // null carry and resurrect a stale earlier row (and drop the row
-    // entirely when no earlier non-null exists), diverging from SQL as-of
-    // semantics and the native AsOfJoinExec.
-    val carryStructType = org.apache.spark.sql.types.StructType(
-      carry.map(c => right.schema(c)))
-    val rightSide = right.select(
-      Seq(col(key).as("__k"), col(rightTs).as("__t"), lit(0).as("__side"),
-        struct(carry.map(c => col(c).as(c)): _*).as("__carry")) ++
-        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(s"__l_$c")): _*)
-    val leftSide = left.select(
-      Seq(col(key).as("__k"), col(leftTs).as("__t"), lit(1).as("__side"),
-        lit(null).cast(carryStructType).as("__carry")) ++
-        leftCols.map(c => col(c).as(s"__l_$c")): _*)
-    // deterministic tie policy: among right rows sharing (key, ts), the
-    // MAX carry struct wins (last in ascending order) — without this the
-    // pick is shuffle-order dependent. Skipped only for unorderable carry
-    // types (maps), where ties stay unspecified.
-    val tieBreak =
-      if (org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(carryStructType))
-        Seq(col("__carry").asc) else Nil
-    val w = Window.partitionBy("__k")
-      .orderBy((Seq(col("__t").asc, col("__side").asc) ++ tieBreak): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val filled = rightSide.unionByName(leftSide)
-      .withColumn("__m", last(col("__carry"), ignoreNulls = true).over(w))
-    filled.filter(col("__side") === 1 && col("__m").isNotNull)
-      .select(leftCols.map(c => col(s"__l_$c").as(c)) ++
-        carry.map(c => col("__m").getField(c).as(s"asof_$c")): _*)
-  }
-
-  /** Gate query: for every purchase event, the user's latest preceding (or
-    * simultaneous) click — oracle: DuckDB's native ASOF JOIN. Clicks are
-    * deduplicated per (user, ts) by max event_id on both sides so ties are
-    * deterministic. */
-  def asofJoinQuery(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts")
-    val clicks = ev.filter(col("event_type") === "click")
-      .groupBy("user_id", "ts")
-      .agg(max("event_id").as("click_id"))
-    asofJoin(purchases, clicks, key = "user_id",
-      leftTs = "ts", rightTs = "ts", carry = Seq("click_id"))
-      .select(col("event_id"), col("user_id"), col("asof_click_id"))
-  }
-
   // ------------------------------------------------------ scalar functions
 
   /** X1/X3: truncate-to-unit time coercion (`consume-time`'s keyword-unit

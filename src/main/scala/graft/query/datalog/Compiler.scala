@@ -880,14 +880,10 @@ class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
 
   /** Rule application: rename the rule's head params to the caller's
     * variables (or filter on constants). Acyclic rules inline (multi-body =
-    * union, Q8); self-referencing rules run a semi-naive fixpoint (Q9) —
-    * including NONLINEAR bodies (several self-references): each
-    * self-reference in turn gets the frontier while the others get the full
-    * accumulator, so a derivation pairing a new tuple with an old one is
-    * never lost (the classic semi-naive rewrite; delta⋈delta alone would be
-    * incomplete). MUTUALLY recursive rule sets (an SCC of ≥ 2 rules —
-    * crux-legal via arbitrary :rules vectors) evaluate as ONE combined
-    * multi-relation fixpoint over the whole component ([[evalScc]]).
+    * union, Q8); a recursive rule evaluates its strongly-connected component
+    * as ONE semi-naive fixpoint (Q9, [[evalScc]]) — a self-referencing rule
+    * is a component of one, MUTUALLY recursive rule sets (crux-legal via
+    * arbitrary :rules vectors) are larger ones.
     *
     * `applying` tracks in-progress rule expansions purely as an internal
     * re-entry guard: component detection routes every legal cycle into a
@@ -909,49 +905,7 @@ class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
         rule.bodies.map(b => compileClauses(docs, b, rules, inProgress)
             .select(paramNames.map(col): _*))
           .reduce(_.unionByName(_)).distinct()
-      else if (scc.sizeIs > 1) evalScc(docs, scc, rules, applying)(rule.name)
-      else {
-        // normalize FIRST: or-nested self-references distribute into their
-        // own bodies; the partition below then sees every recursive call at
-        // the top level (deep check — a nested ref in a base body would
-        // silently re-enter the inliner)
-        val bodies = normalizeRecBodies(rule.name, rule.bodies, scc + rule.name, rules)
-        val (baseBodies, recBodies) = bodies.partition(
-          !_.flatMap(clauseRuleRefs(_, rules)).contains(rule.name))
-        require(baseBodies.nonEmpty, s"recursive rule ${rule.name} needs a base body")
-        val base = baseBodies.map(b => compileClauses(docs, b, rules, inProgress)
-            .select(paramNames.map(col): _*))
-          .reduce(_.unionByName(_)).distinct()
-        Fixpoint.fixpoint2(base, (delta, acc) => {
-          DatalogCompiler.checkDeadline(s"recursive rule ${rule.name} fixpoint")
-          // one compiled conjunction per (body, chosen self-reference):
-          // the chosen occurrence binds to delta, every other one to acc
-          recBodies.flatMap { body =>
-            val selfPositions = body.zipWithIndex.collect {
-              case (RuleApp(n, _), i) if n == rule.name => i
-            }
-            selfPositions.map { chosen =>
-              var rel: Option[Rel] = None
-              def merge(r: Rel): Unit = rel = Some(rel.fold(r)(naturalJoin(_, r)))
-              body.zipWithIndex.foreach {
-                case (RuleApp(n, as), i) if n == rule.name =>
-                  merge(renameTo(if (i == chosen) delta else acc, paramNames, as))
-                case (p: Pattern, _) => merge(compilePattern(docs, p))
-                case (RuleApp(n, as), _) =>
-                  merge(applyRule(docs, rules(n), as, rules, inProgress))
-                case (Pred(op, as), _) =>
-                  rel = Some(rel.get.filter(predColumn(op, as, rel.get.schema)))
-                case (Bind(f, as, out), _) =>
-                  rel = Some(rel.get.withColumn(out.name,
-                    fnColumn(f, as, rel.get.schema)))
-                case (other, _) => throw new UnsupportedOperationException(
-                  s"clause $other inside recursive body")
-              }
-              rel.get.select(paramNames.map(col): _*)
-            }
-          }.reduce(_.unionByName(_))
-        }, paramNames)
-      }
+      else evalScc(docs, scc, rules, applying)(rule.name)
     renameTo(resolved, paramNames, args)
   }
 
@@ -971,8 +925,8 @@ class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
     * is released separately via `CacheRegistry.unpersistAll()`). */
   def clearFixpointCache(): Unit = sccCache.clear()
 
-  /** Evaluate a mutually recursive rule component (|scc| ≥ 2) as ONE
-    * combined multi-relation semi-naive fixpoint
+  /** Evaluate a recursive rule component (one self-recursive rule, or
+    * several mutually recursive ones) as ONE combined semi-naive fixpoint
     * ([[graft.query.Fixpoint.fixpointMulti]]). Per member: bodies with no
     * component references seed its relation; each round derives every
     * member's new tuples, binding ONE component reference per conjunction
@@ -981,7 +935,9 @@ class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
     * derivation pairing a new P-tuple with an old Q-tuple is never lost.
     * A member with no seed body starts absent and materializes the first
     * round something derives into it (conjunctions referencing an absent
-    * member are empty by definition and skipped). */
+    * member are empty by definition and skipped). A body with several
+    * component references (NONLINEAR recursion) compiles once per chosen
+    * occurrence. */
   private def evalScc(docs: DataFrame, scc: Set[String], rules: Map[String, Rule],
                       applying: Set[String]): Map[String, Rel] =
     sccCache.getOrElseUpdate((docs, scc, rules), {
@@ -1001,7 +957,7 @@ class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
               .select(params(m).map(col): _*))
             .reduce(_.unionByName(_))
       }
-      require(bases.nonEmpty, s"mutually recursive rules ${members.mkString(", ")} " +
+      require(bases.nonEmpty, s"recursive rules ${members.mkString(", ")} " +
         "need at least one body with no component reference (a base case)")
 
       /** Compile one conjunction with per-OCCURRENCE bindings for component
@@ -1022,13 +978,13 @@ class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
           case (Bind(f, as, out), _) =>
             rel = Some(rel.get.withColumn(out.name, fnColumn(f, as, rel.get.schema)))
           case (other, _) => throw new UnsupportedOperationException(
-            s"clause $other inside mutually recursive body")
+            s"clause $other inside recursive body")
         }
         rel.get.select(params(owner).map(col): _*)
       }
 
       val step = (deltas: Map[String, DataFrame], accs: Map[String, DataFrame]) => {
-        DatalogCompiler.checkDeadline("mutually recursive rule fixpoint")
+        DatalogCompiler.checkDeadline(s"recursive rule ${members.mkString(", ")} fixpoint")
         members.flatMap { m =>
           val conjs = partitioned(m)._2.flatMap { body =>
             val refs = body.zipWithIndex.collect {
@@ -1050,7 +1006,7 @@ class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
         }.toMap
       }
 
-      val results = graft.query.Fixpoint.fixpointMulti(
+      val results = Fixpoint.fixpointMulti(
         bases, step, members.map(m => m -> params(m)).toMap)
       members.map { m =>
         m -> results.getOrElse(m, {

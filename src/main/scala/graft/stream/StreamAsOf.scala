@@ -4,10 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** As-of enrichment INSIDE a streaming plan — the streaming counterpart of
-  * the batch as-of join family (`graft.plans.AsOfJoin`,
-  * `Relational.asofJoin`): every event picks up the latest dimension
-  * version at-or-before its event time, left-outer semantics (unmatched /
-  * null-key / null-time events keep null carries).
+  * the batch as-of join (`graft.plans.AsOfJoin`): every event picks up
+  * the latest dimension version at-or-before its event time, left-outer
+  * semantics (unmatched / null-key / null-time events keep null carries).
   *
   * Spark shape: the dimension is pre-aggregated per key into ONE row
   * holding a time-sorted version array (`sort_array(collect_list(...))`),

@@ -4,17 +4,14 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.SparkSpec
-import graft.query.Relational
 
-/** Three-way differential for the as-of join: the custom Catalyst
-  * operator ([[AsOfJoin.asofJoinNative]] → AsOfJoinExec), the scalable
-  * union+window formulation ([[Relational.asofJoin]]), and a naive
-  * per-row Scala model — on generated tables. The two Spark paths
-  * already hash-match one DuckDB oracle on ONE fixed query; this pins
-  * them against each other (and the model) across random shapes: empty
-  * sides, keys with no matches, tie timestamps across sides, dense and
-  * sparse histories. Forward direction, tolerance, and left-outer (the
-  * native operator's extra surface) check against the model alone. */
+/** Differential for the as-of join: the custom Catalyst operator
+  * ([[AsOfJoin.asofJoinNative]] → AsOfJoinExec) against a naive per-row
+  * Scala model — on generated tables. The operator already hash-matches
+  * a DuckDB oracle on ONE fixed query; this pins it to the model across
+  * random shapes: empty sides, keys with no matches, tie timestamps across
+  * sides, dense and sparse histories, plus forward direction, tolerance,
+  * and left-outer. */
 /** Fixture rows — top-level so Spark can derive product encoders. */
 case class AsofL(k: Long, lts: Long, lv: Long)
 case class AsofR(k: Long, rts: Long, rv: Long)
@@ -37,9 +34,8 @@ class AsOfJoinDifferentialSpec extends SparkSpec {
     val nL = (seed % 30 + 1).toInt
     val nR = (seed % 23 + 1).toInt
     // unique (k, rts) on the right: tie policy AMONG equal right rows is
-    // deliberately unspecified (the window path picks max carry; the merge
-    // path the last in sort order) — dedupe keeps the comparison on
-    // DEFINED semantics, mirroring the gate queries' max-dedup
+    // deliberately unspecified — dedupe keeps the comparison on DEFINED
+    // semantics, mirroring the gate queries' max-dedup
     val right = sample(genR, nR, seed * 7 + 1)
       .groupBy(r => (r.k, r.rts)).map(_._2.maxBy(_.rv)).toSeq
     (sample(genL, nL, seed * 13 + 5), right)
@@ -68,7 +64,7 @@ class AsOfJoinDifferentialSpec extends SparkSpec {
         if (r.isNullAt(3)) None else Some(r.getLong(3)))
     }.toSet
 
-  test("differential: 25 random tables — native vs union+window vs model (backward inner)") {
+  test("differential: 25 random tables vs the model (backward inner)") {
     for (seed <- 1L to 25L) {
       val (ls, rs) = genTables(seed)
       val lDf = ls.toDF("k", "lts", "lv")
@@ -76,12 +72,8 @@ class AsOfJoinDifferentialSpec extends SparkSpec {
       val want = model(ls, rs, "backward", None, outer = false)
       val native = collectRows(AsOfJoin.asofJoinNative(
         lDf, rDf, "k", "lts", "rts", Seq("rv")))
-      val window = collectRows(Relational.asofJoin(
-        lDf, rDf, "k", "lts", "rts", Seq("rv")))
       assert(native == want, s"native diverged from model [seed $seed]\n" +
         s" native-only: ${(native -- want).take(3)}\n model-only: ${(want -- native).take(3)}")
-      assert(window == want, s"union+window diverged from model [seed $seed]\n" +
-        s" window-only: ${(window -- want).take(3)}\n model-only: ${(want -- window).take(3)}")
     }
   }
 
@@ -106,8 +98,6 @@ class AsOfJoinDifferentialSpec extends SparkSpec {
     val lDf = Seq(AsofL(1, 10, 1), AsofL(2, 20, 2)).toDF("k", "lts", "lv")
     val empty = Seq.empty[AsofR].toDF("k", "rts", "rv")
     assert(collectRows(AsOfJoin.asofJoinNative(
-      lDf, empty, "k", "lts", "rts", Seq("rv"))).isEmpty)
-    assert(collectRows(Relational.asofJoin(
       lDf, empty, "k", "lts", "rts", Seq("rv"))).isEmpty)
     assert(collectRows(AsOfJoin.asofJoinNative(
       lDf, empty, "k", "lts", "rts", Seq("rv"), joinType = "left")) ==

@@ -2,13 +2,16 @@ package graft.query
 
 import java.time._
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.expr
 import org.scalacheck.Gen
+
+import graft.SparkSpec
 
 /** consume-time coercion matrix (`/root/reference/src/dataworks/utils/time.clj:11-86`)
   * — property: total function, never throws (the reference documents the
-  * no-throw contract at time.clj:37-39). */
-class FunctionsSpec extends AnyFunSuite {
+  * no-throw contract at time.clj:37-39) — plus the column-level toolkit
+  * over DataFrames (X2 `millisUntil`, X7 `renameColumns`, F8 ns-keys). */
+class FunctionsSpec extends SparkSpec {
 
   private val now = Instant.parse("2024-06-15T12:30:45.123Z")
 
@@ -105,5 +108,47 @@ class FunctionsSpec extends AnyFunSuite {
     assert(Functions.idNamespace(":transformer/foo") == "transformer")
     assert(Functions.idName(":transformer/foo") == "foo")
     assert(Functions.stringifyKeyword(":a/b") == "a/b")
+  }
+
+  test("X2 millisUntil: signed millis from the query's current time") {
+    // current_timestamp() is one value per query, so the offsets are exact
+    import spark.implicits._
+    val got = spark.range(1).select(
+      Functions.millisUntil(expr("current_timestamp() + INTERVAL 90 SECONDS")),
+      Functions.millisUntil(expr("current_timestamp() - INTERVAL 2 HOURS")))
+      .as[(Long, Long)].head()
+    assert(got == (90000L, -7200000L))
+  }
+
+  test("X7 renameColumns: every column through a case converter, data kept") {
+    import spark.implicits._
+    val df = Seq((1, "a")).toDF("userId", "display-name")
+    val out = Functions.renameColumns(df, Functions.toSnake)
+    assert(out.columns.toSeq == Seq("user_id", "display_name"))
+    assert(out.as[(Int, String)].head() == (1, "a"))
+  }
+
+  test("F8 selectNsKeys / excludeNsKeys / nsKeys: select, drop, prefix by namespace") {
+    import spark.implicits._
+    val df = Seq((1, "ada", 7)).toDF("user_id", "user_name", "order_id")
+    assert(Functions.selectNsKeys(df, "user").columns.toSeq == Seq("user_id", "user_name"))
+    assert(Functions.excludeNsKeys(df, "user").columns.toSeq == Seq("order_id"))
+    // a prefix match needs the separator: "use" is not the "user" namespace
+    assert(Functions.selectNsKeys(df, "use").columns.isEmpty)
+    val moved = Functions.nsKeys(df, "tx", Seq("order_id"))
+    assert(moved.columns.toSeq == Seq("user_id", "user_name", "tx_order_id"))
+    assert(moved.select("tx_order_id").as[Int].head() == 7)
+  }
+
+  test("F8 setNs: re-namespaces every column; a merging rename is rejected") {
+    import spark.implicits._
+    val df = Seq((1, "ada")).toDF("user_id", "name")
+    val out = Functions.setNs(df, "person")
+    assert(out.columns.toSeq == Seq("person_id", "person_name"))
+    assert(out.as[(Int, String)].head() == (1, "ada"))
+    val clash = Seq((1, 2)).toDF("user_id", "order_id")
+    val e = intercept[IllegalArgumentException](Functions.setNs(clash, "x"))
+    assert(e.getMessage.contains("would merge distinct columns"), e.getMessage)
+    assert(e.getMessage.contains("user_id+order_id -> x_id"), e.getMessage)
   }
 }
