@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.query.Fixpoint
-import graft.registry.FunctionRegistry
 import Ast._
 
 /** Compiles Datalog queries to DataFrame plans — the Catalyst replacement
@@ -230,8 +229,7 @@ object DatalogCompiler {
     statsCache.synchronized(statsCache.clear())
 }
 
-class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
-                      /** :in binding sets larger than this broadcast-join
+class DatalogCompiler(/** :in binding sets larger than this broadcast-join
                         * one compiled body instead of substituting per row
                         * (tests force either path by pinning it to 0 or
                         * Int.MaxValue). */
@@ -1090,8 +1088,8 @@ class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
     }
   }
 
-  /** Function resolution for binds (Q17): registry column fns first (the
-    * named-transformer surface, F1), then Spark builtins. */
+  /** Function resolution for binds (Q17): the Clojure arithmetic forms
+    * below, then Spark builtins. */
   private def fnColumn(fn: String, args: Seq[Term],
       schema: org.apache.spark.sql.types.StructType): Column = {
     val cs = args.map(termCol)
@@ -1131,7 +1129,7 @@ class DatalogCompiler(registry: FunctionRegistry = FunctionRegistry.default,
           val q = cs(0).cast("double") / cs(1).cast("double")
           q - (q % lit(1.0))
         }
-      case _ => registry.columnFn(fn).map(_(cs)).getOrElse(call_function(fn, cs: _*))
+      case _ => call_function(fn, cs: _*)
     }
   }
 

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.query.datalog.Ast._
-import graft.registry.FunctionRegistry
 
 /** Helpers for running Datalog over the fixture tables: Crux has ONE
   * document universe, so multiple typed tables become one wide sparse
@@ -314,6 +313,6 @@ object DatalogDb {
         Pred(">", Seq(V("t"), C(300000.0))),
         Pattern(V("o"), "order_cust", V("c")),
         Pattern(V("c"), "c_mktsegment", V("seg"))))
-    new DatalogCompiler(FunctionRegistry.default).run(ordersCustomers(s, d), q)
+    new DatalogCompiler().run(ordersCustomers(s, d), q)
   }
 }

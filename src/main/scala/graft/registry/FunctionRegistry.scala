@@ -5,14 +5,14 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.concurrent.{ExecutionContext, Future}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 
 /** Named-function registry (F1/F2, SURVEY.md §2.4): the hot-swappable
   * transformer/transactor surface. The reference keeps eval'd functions in
   * atoms keyed by name and splices them into user code
   * (`/root/reference/src/dataworks/transformer.clj:16-71`,
   * `/root/reference/src/dataworks/transformers.clj:13-40`); here the
-  * registry maps names to precompiled Scala functions / Column builders —
+  * registry maps names to precompiled Scala functions —
   * same observable capability (create, update, invoke by name, cluster-wide
   * swap via the control plane) without runtime eval (SURVEY.md §7.4 risk 5).
   */
@@ -21,9 +21,6 @@ class FunctionRegistry {
   /** F1 transformers: whole-DataFrame transforms (stream-node stages,
     * rule views) — create-or-replace is the hot-swap. */
   private val transformers = new ConcurrentHashMap[String, DataFrame => DataFrame]()
-
-  /** F1 column functions: named scalar builders usable inside op-specs. */
-  private val columnFns = new ConcurrentHashMap[String, Seq[Column] => Column]()
 
   /** F2 transactors: named side-effecting handlers (HTTP calls, texts —
     * `transactor.clj:23-121`); invoked fire-and-forget like the `go` block. */
@@ -36,11 +33,6 @@ class FunctionRegistry {
   def transform(name: String, df: DataFrame): DataFrame =
     transformer(name).getOrElse(
       throw new NoSuchElementException(s"no transformer '$name'"))(df)
-
-  def registerColumnFn(name: String, f: Seq[Column] => Column): Unit =
-    { columnFns.put(name, f); () }
-  def columnFn(name: String): Option[Seq[Column] => Column] =
-    Option(columnFns.get(name))
 
   def registerTransactor(name: String, f: Seq[String] => Unit): Unit =
     { transactors.put(name, f); () }
@@ -67,10 +59,9 @@ class FunctionRegistry {
     }
 
   def names: Set[String] =
-    (transformers.keySet.asScala ++ columnFns.keySet.asScala ++
-      transactors.keySet.asScala).toSet
+    (transformers.keySet.asScala ++ transactors.keySet.asScala).toSet
   def remove(name: String): Unit = {
-    transformers.remove(name); columnFns.remove(name); transactors.remove(name); ()
+    transformers.remove(name); transactors.remove(name); ()
   }
 }
 

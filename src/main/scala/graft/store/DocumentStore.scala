@@ -1,12 +1,16 @@
 package graft.store
 
 import java.sql.Timestamp
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DatasetBridge
+import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.VersionedDoc
@@ -32,8 +36,12 @@ import graft.core.VersionedDoc
   * monotonic tx clock — the moral equivalent for a driver-owned control
   * plane; match/cas REQUIRE that serialization, SURVEY.md §7.4 risk 1).
   * Data layout: rows are partitioned by `valid_date` so as-of reads prune
-  * historical partitions, and each append is a small parquet file — at
-  * warehouse scale you'd compact these, but the read view is identical.
+  * historical partitions, and each transaction is one small parquet file
+  * — at warehouse scale you'd compact these, but the read view is
+  * identical. A driver-side transaction (put, putAll, delete, matchPut)
+  * writes its file on the driver through Spark's own parquet writer, so
+  * a commit runs no Spark job; [[putBatch]], whose rows never reach the
+  * driver, appends with a write job.
   *
   * Read path: `asOf(vt, tt)` = filter(valid_from <= vt && tx_time <= tt)
   * → row_number() over (partition by id, order by valid_from desc, tx_time
@@ -53,6 +61,10 @@ import graft.core.VersionedDoc
   * enters the plan, so its generated code is the same on every request. The base is dropped, and rebuilt on the next current read, by
   * a retroactive row (validFrom < vt0), a [[putBatch]], an [[evict]], or a
   * delta past [[DocumentStore.MaxDelta]] rows; [[compact]] keeps it.
+  * The query doors ([[q]], [[qPublic]]) read the base already typed: the
+  * base's docs parsed by a reader's schema are materialized once per
+  * (schema, public-only) and the same overlay applies, with only the live
+  * delta winners parsed per read.
   */
 /** Speculative transaction op for [[DocumentStore.withTx]] — the crux
   * `::xt/put` / `::xt/delete` / `::xt/match` op shapes. A failed Match
@@ -110,7 +122,10 @@ class DocumentStore(val spark: SparkSession, val path: String) {
       Option(maintenance.get()).foreach(h =>
         try h.close() catch { case _: Exception => () })
       // reads on a closed store take the scan path; the base's blocks go now
-      Option(view).foreach(_.base.rdd.unpersist(blocking = false))
+      Option(view).foreach { v =>
+        v.base.rdd.unpersist(blocking = false)
+        v.base.relations.values().forEach(_.rdd.foreach(_.unpersist(blocking = false)))
+      }
       dropView()
       DocumentStore.release(spark, path, lockToken)
     }
@@ -133,20 +148,31 @@ class DocumentStore(val spark: SparkSession, val path: String) {
   def now(): Timestamp =
     new Timestamp(math.max(System.currentTimeMillis(), lastTx.get()))
 
-  /** The ONE physical append pipeline (partition column, partitioning,
-    * save mode): `append` (driver-side rows) and `putBatch` (distributed
-    * rows) both delegate here so the table layout can never fork. */
-  private def appendDF(rows: DataFrame): Unit =
-    rows
-      .withColumn("valid_date", to_date(col("validFrom")))
-      .write.mode(SaveMode.Append).partitionBy("valid_date").parquet(path)
-
-  /** Every driver-side write lands here, under `lock`: the delta sees each
-    * committed row, and a failed append drops the base (a partial commit
-    * would otherwise be invisible to current reads). */
+  /** Every driver-side write lands here, under `lock`: one transaction
+    * file per `valid_date`, written on this thread (no Spark job). The
+    * layout is a write task's: the partition value is the Catalyst
+    * `to_date(validFrom)` cast in this session's zone, the directory name
+    * Spark's partition-path formatting, and the file comes from Spark's
+    * parquet writer with this session's confs
+    * ([[DocumentStore.writeFile]]) with [[putBatch]]'s columns. The delta
+    * sees each committed row, and a failed append drops the base (a
+    * partial commit would otherwise be invisible to current reads). */
   private def append(rows: Seq[VersionedDoc]): Unit = {
-    try appendDF(rows.toDS().toDF())
-    catch { case e: Throwable => dropView(); throw e }
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp
+    import org.apache.spark.sql.types.DateType
+    val zone = Some(spark.conf.get("spark.sql.session.timeZone"))
+    def partition(validFrom: Timestamp): String = {
+      val day = Cast(Literal(fromJavaTimestamp(validFrom), TimestampType), DateType, zone).eval()
+      ExternalCatalogUtils.getPartitionPathString("valid_date",
+        Cast(Literal(day, DateType), StringType, zone).eval().toString)
+    }
+    try rows.groupBy(r => partition(r.validFrom)).foreach { case (dir, part) =>
+      DocumentStore.writeFile(spark, new Path(path, dir),
+        part.map(r => InternalRow(UTF8String.fromString(r.id), fromJavaTimestamp(r.validFrom),
+          fromJavaTimestamp(r.txTime), r.deleted, UTF8String.fromString(r.doc))))
+    } catch { case e: Throwable => dropView(); throw e }
     Option(view).foreach { v =>
       if (rows.exists(_.validFrom.getTime < v.base.vt0) ||
           v.delta.size + rows.size > DocumentStore.MaxDelta) dropView()
@@ -252,13 +278,15 @@ class DocumentStore(val spark: SparkSession, val path: String) {
       val vf = validFrom.getOrElse(tx)
       // the rows never reach the driver, so the delta cannot track them
       dropView()
-      appendDF(docs
+      docs
         .select(
           col("id").cast("string").as("id"),
           lit(vf).as("validFrom"),
           lit(tx).as("txTime"),
           lit(false).as("deleted"),
-          col("doc").cast("string").as("doc")))
+          col("doc").cast("string").as("doc"),
+          to_date(lit(vf)).as("valid_date"))
+        .write.mode(SaveMode.Append).partitionBy("valid_date").parquet(path)
       tx
     }
 
@@ -492,7 +520,9 @@ class DocumentStore(val spark: SparkSession, val path: String) {
     * a valid time at or past the base's, this is the current view (class
     * doc); otherwise the version-log scan. */
   def asOf(validTime: Timestamp, txTime: Timestamp): DataFrame =
-    currentAt(validTime, txTime).map(_._1).getOrElse(scanAsOf(validTime, txTime))
+    currentAt(validTime, txTime)
+      .map { case (base, winners) => overlay(base.df, base.rdd, winners, identity) }
+      .getOrElse(scanAsOf(validTime, txTime))
 
   /** The version-log scan behind every read the current view does not
     * answer — and the reference the view is tested against. */
@@ -528,11 +558,12 @@ class DocumentStore(val spark: SparkSession, val path: String) {
     * (they fall due only as time passes). */
   @volatile private var noViewUntil = 0L
 
-  /** Drop the base (caller holds `lock`). Its blocks are released by
-    * Spark's cleaner once no in-flight read references them. */
+  /** Drop the base (caller holds `lock`). Its blocks, and its typed
+    * relations', are released by Spark's cleaner once nothing references
+    * them: a DataFrame a read handed out may still run after the drop. */
   private def dropView(): Unit = {
-    Option(view).foreach(_.base.statsSources.values()
-      .forEach(graft.query.datalog.DatalogCompiler.forgetStats(_)))
+    Option(view).foreach(_.base.relations.values()
+      .forEach(r => graft.query.datalog.DatalogCompiler.forgetStats(r.df)))
     view = null
   }
 
@@ -555,14 +586,16 @@ class DocumentStore(val spark: SparkSession, val path: String) {
       .filter(col("rn") === 1 && !col("deleted"))
       .select("id", "validFrom", "txTime", "doc")
     val (df, _, rdd) =
-      org.apache.spark.sql.graft.DatasetBridge.materializeWithCount(top, reliable = false)
+      DatasetBridge.materializeWithCount(top, reliable = false)
     Some(DocumentStore.View(new DocumentStore.Base(vt0, df, rdd), future))
   }
 
-  /** The current view at `validTime`, with its base, when it answers this
-    * read: no tx-time cut, an open store, and a valid time at or past the
-    * base's (a missing base is built here, as of `validTime` or now). */
-  private def currentAt(validTime: Timestamp, txTime: Timestamp): Option[(DataFrame, DocumentStore.Base)] = {
+  /** The base and the delta's winners at `validTime`, when the current
+    * view answers this read: no tx-time cut, an open store, and a valid
+    * time at or past the base's (a missing base is built here, as of
+    * `validTime` or now). */
+  private def currentAt(validTime: Timestamp,
+                        txTime: Timestamp): Option[(DocumentStore.Base, Seq[VersionedDoc])] = {
     if (txTime.getTime != DocumentStore.MaxTxTime.getTime) return None
     val vt = validTime.getTime
     // only a read at or past the last commit builds a base: an older valid
@@ -577,24 +610,26 @@ class DocumentStore(val spark: SparkSession, val path: String) {
     v.filter(x => !closed && vt >= x.base.vt0).map { x =>
       // delta winners at vt by the as-of order (validFrom, txTime); each
       // beats its id's base row, which is older on both clocks
-      val winners = x.delta.filter(_.validFrom.getTime <= vt).groupBy(_.id).values
-        .map(_.maxBy(r => (r.validFrom.getTime, r.txTime.getTime))).toSeq
-      val snap =
-        if (winners.isEmpty) x.base.df
-        else {
-          // the superseded ids leave the base inside its own scan: a join
-          // would broadcast them, one more job per read
-          val superseded = winners.map(r => UTF8String.fromString(r.id)).toSet
-          org.apache.spark.sql.graft.DatasetBridge.internalCreate(spark,
-            x.base.rdd.filter(row => !superseded.contains(row.getUTF8String(0))),
-            x.base.df.schema)
-            .unionByName(winners.filterNot(_.deleted)
-              .map(r => (r.id, r.validFrom, r.txTime, r.doc))
-              .toDF("id", "validFrom", "txTime", "doc"))
-        }
-      (snap, x.base)
+      (x.base, x.delta.filter(_.validFrom.getTime <= vt).groupBy(_.id).values
+        .map(_.maxBy(r => (r.validFrom.getTime, r.txTime.getTime))).toSeq)
     }
   }
+
+  /** A relation over the base (`df`, backed by `rdd`, `id` first) as of
+    * the read: the winners' ids leave it inside its own scan — a join
+    * would broadcast them, one more job per read — and `live` of the live
+    * winners, as (id, validFrom, txTime, doc), is unioned in. */
+  private def overlay(df: DataFrame, rdd: RDD[InternalRow], winners: Seq[VersionedDoc],
+                      live: DataFrame => DataFrame): DataFrame =
+    if (winners.isEmpty) df
+    else {
+      val superseded = winners.map(r => UTF8String.fromString(r.id)).toSet
+      DatasetBridge.internalCreate(spark,
+        rdd.filter(row => !superseded.contains(row.getUTF8String(0))), df.schema)
+        .unionByName(live(winners.filterNot(_.deleted)
+          .map(r => (r.id, r.validFrom, r.txTime, r.doc))
+          .toDF("id", "validFrom", "txTime", "doc")))
+    }
 
   /** Current snapshot (Crux `(db node)`). */
   def db(): DataFrame = asOf(now())
@@ -821,10 +856,9 @@ class DocumentStore(val spark: SparkSession, val path: String) {
   /** Wide relation over an arbitrary snapshot frame (id, …, doc): JSON doc
     * payloads expanded to typed columns via `schema` (plus `id`) — the
     * document universe the Datalog compiler runs against. Shared by the
-    * committed ([[relation]]) and speculative ([[qWith]]) paths so both
-    * query surfaces see identical typing rules. */
-  private def relationOf(snap: DataFrame,
-                         schema: org.apache.spark.sql.types.StructType): DataFrame =
+    * committed ([[q]], its typed base relations included) and speculative
+    * ([[qWith]]) paths so every query surface sees identical typing rules. */
+  private[store] def relationOf(snap: DataFrame, schema: StructType): DataFrame =
     snap
       .select(col("id"), from_json(col("doc"), schema).as("d"))
       // getField takes the literal name — col(s"d.$f") would parse a field
@@ -833,24 +867,30 @@ class DocumentStore(val spark: SparkSession, val path: String) {
         .map(f => col("d").getField(f).as(f)): _*)
 
   /** EDN Datalog over the (valid-time, tx-time) snapshot, `publicOnly`
-    * dropping ':' ids. Over the current view the join-ranking statistics
-    * come from the same relation over the BASE: its plan is the same on
-    * every request, so the stats pass runs once per base instead of once
-    * per commit (stats only rank joins — no result depends on them). */
-  private def query(edn: String, schema: org.apache.spark.sql.types.StructType,
+    * dropping ':' ids. Over the current view the docs come typed: the
+    * base's relation for this (schema, public-only) is materialized once
+    * per base, and a read parses only the live delta winners. The same
+    * relation ranks the joins, so the compiler's stats pass runs once per
+    * base instead of once per commit (stats only rank joins — no result
+    * depends on them). Past [[DocumentStore.MaxTypedRelations]] schemas a
+    * base parses its docs per read, as the scan path does. */
+  private def query(edn: String, schema: StructType,
                     validTime: Timestamp, txTime: Timestamp,
                     publicOnly: Boolean): Either[String, DataFrame] = {
     def scope(df: DataFrame): DataFrame =
       if (publicOnly) df.filter(!col("id").startsWith(":")) else df
+    def typed(snap: DataFrame): DataFrame = scope(relationOf(snap, schema))
     currentAt(validTime, txTime) match {
-      case Some((snap, base)) =>
-        val stats = base.statsSources.computeIfAbsent((schema, publicOnly),
-          _ => scope(relationOf(base.df, schema)))
-        graft.query.datalog.EdnDatalog.run(scope(relationOf(snap, schema)), edn,
-          new graft.query.datalog.DatalogCompiler(statsSource = Some(stats)))
+      case Some((base, winners)) =>
+        val rel = base.relation((schema, publicOnly), typed(base.df))
+        val docs = rel.rdd match {
+          case Some(rdd) => overlay(rel.df, rdd, winners, typed)
+          case None => typed(overlay(base.df, base.rdd, winners, identity))
+        }
+        graft.query.datalog.EdnDatalog.run(docs, edn,
+          new graft.query.datalog.DatalogCompiler(statsSource = Some(rel.df)))
       case None =>
-        graft.query.datalog.EdnDatalog.run(
-          scope(relationOf(scanAsOf(validTime, txTime), schema)), edn)
+        graft.query.datalog.EdnDatalog.run(typed(scanAsOf(validTime, txTime)), edn)
     }
   }
 
@@ -933,13 +973,24 @@ object DocumentStore {
     * (id, validFrom, txTime, doc), backed by the locally checkpointed
     * `rdd`. A tombstone winner is left out: any later version of its id
     * arrives through the delta and replaces the base row regardless.
-    * `statsSources` memoizes the Datalog stats relation per (schema,
-    * public-only), so the compiler's stats pass runs once per base. */
-  private final class Base(val vt0: Long, val df: DataFrame,
-                           val rdd: org.apache.spark.rdd.RDD[InternalRow]) {
-    val statsSources = new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.types.StructType, Boolean), DataFrame]()
+    * `relations` holds the query doors' relation per (schema,
+    * public-only): typed and materialized for the first
+    * [[MaxTypedRelations]] keys, the untyped parse over `df` past them. */
+  private final class Base(val vt0: Long, val df: DataFrame, val rdd: RDD[InternalRow]) {
+    val relations = new java.util.concurrent.ConcurrentHashMap[(StructType, Boolean), Relation]()
+    private val typedSlots = new AtomicInteger(0)
+
+    def relation(key: (StructType, Boolean), untyped: => DataFrame): Relation =
+      relations.computeIfAbsent(key, _ =>
+        if (typedSlots.getAndIncrement() >= MaxTypedRelations) Relation(untyped, None)
+        else try {
+          val (m, _, r) = DatasetBridge.materializeWithCount(untyped, reliable = false)
+          Relation(m, Some(r))
+        } catch { case e: Throwable => typedSlots.decrementAndGet(); throw e })
   }
+  /** A base's relation for one (schema, public-only): `rdd` backs `df`
+    * when it is materialized. */
+  private final case class Relation(df: DataFrame, rdd: Option[RDD[InternalRow]])
   /** Base plus the rows appended since (and rows future-dated at vt0). */
   private final case class View(base: Base, delta: Vector[VersionedDoc])
 
@@ -950,6 +1001,53 @@ object DocumentStore {
 
   /** Wait before retrying a base that too many future-dated rows refused. */
   private val ViewRetryMs = 10000L
+
+  /** Typed relations kept per base: each holds every base doc parsed by
+    * one reader schema, so an unbounded set of schemas would hold the
+    * base many times over. */
+  private[store] val MaxTypedRelations = 8
+
+  /** The data columns of a transaction file as [[putBatch]]'s write task
+    * lays them out (the tx clocks and the tombstone flag are never null). */
+  private val FileSchema = StructType(Seq(
+    StructField("id", StringType),
+    StructField("validFrom", TimestampType, nullable = false),
+    StructField("txTime", TimestampType, nullable = false),
+    StructField("deleted", BooleanType, nullable = false),
+    StructField("doc", StringType)))
+
+  /** Write `rows` ([[FileSchema]]) as one parquet file in `dir`, on the
+    * calling thread, through Spark's own parquet writer set up by
+    * `ParquetFileFormat.prepareWrite` with this session's confs
+    * (compression, timestamp encoding, rebase modes): the file a write
+    * task would produce, without a job. It is written under a hidden name,
+    * which no listing of the table includes (Spark skips names starting
+    * with '.' or '_'), then renamed to a `part-` name, so a reader, the
+    * change tail and a compaction see the whole file or none of it. */
+  private def writeFile(spark: SparkSession, dir: Path, rows: Seq[InternalRow]): Unit = {
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val job = Job.getInstance(session.sessionState.newHadoopConf())
+    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(session, job, Map.empty, FileSchema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("graft-store", 0, TaskType.MAP, 0, 0))
+    val name = s"part-00000-${java.util.UUID.randomUUID()}.c000${factory.getFileExtension(ctx)}"
+    val tmp = new Path(dir, s".$name.tmp")
+    val file = new Path(dir, name)
+    val fs = dir.getFileSystem(job.getConfiguration)
+    try {
+      val out = factory.newInstance(tmp.toString, FileSchema, ctx)
+      try rows.foreach(out.write) finally out.close()
+      if (!fs.rename(tmp, file))
+        throw new java.io.IOException(s"rename $tmp -> $file failed")
+    } catch {
+      case e: Throwable =>
+        try fs.delete(tmp, false) catch { case _: Exception => () }
+        throw e
+    }
+  }
 
   /** In-JVM holder registry: the pid check below cannot see a second store
     * INSIDE this same process (its pid is alive — ours), so live holders in

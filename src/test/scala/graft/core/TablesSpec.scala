@@ -123,4 +123,17 @@ class TablesSpec extends SparkSpec {
     Seq((3L, "r")).toDF("id", "part").write.mode("append").partitionBy("part").parquet(ds)
     assert(rows(Tables(spark, dir.toString, "d")) == Seq(Row(1L, "p"), Row(2L, "q"), Row(3L, "r")))
   }
+
+  test("reading events leaves a non-UTC session's confs alone and yields the UTC session's instants") {
+    val la = spark.newSession()
+    la.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    val confs = Seq("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
+    val before = confs.map(la.conf.getOption)
+    val dir = sf("sf0.001")
+    val inLa = Tables.events(la, dir).select("event_id", "ts").orderBy("event_id").collect().toSeq
+    Tables.eventsRawTs(la, dir).count()
+    assert(confs.map(la.conf.getOption) == before)
+    val inUtc = Tables.events(spark, dir).select("event_id", "ts").orderBy("event_id").collect().toSeq
+    assert(inLa.nonEmpty && inLa == inUtc)
+  }
 }

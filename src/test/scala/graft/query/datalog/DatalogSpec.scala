@@ -1,7 +1,6 @@
 package graft.query.datalog
 
 import graft.SparkSpec
-import graft.registry.FunctionRegistry
 import Ast._
 
 /** Datalog-compiler semantics, mirroring the reference's query shapes:
@@ -20,7 +19,7 @@ class DatalogSpec extends SparkSpec {
     ("e5", "eva", "ops", 70.0, "e3")
   ).toDF("id", "name", "dept", "salary", "manager")
 
-  private val compiler = new DatalogCompiler(new FunctionRegistry)
+  private val compiler = new DatalogCompiler()
 
   test("same-entity attribute join + constant filter (alert.clj shape)") {
     val q = Query(
@@ -333,7 +332,7 @@ class DatalogSpec extends SparkSpec {
       s"the rare-value group must lead the join, got $ordered")
     // stats OFF keeps the static heuristic (ties → alphabetical): the
     // plan differs but the RESULT may not — conjunction is commutative
-    val noStats = new DatalogCompiler(new FunctionRegistry, useStats = false)
+    val noStats = new DatalogCompiler(useStats = false)
     val q = Query(
       find = Seq(FindVar(V("b")), FindVar(V("c"))),
       where = ps)

@@ -9,9 +9,9 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 
 /** The current view's cost contract: once its base is built, a write
-  * followed by a current read touches no version-log file, and the read's
+  * followed by a current read touches no version-log file, the read's
   * plan carries no timestamp literal (so its generated code is the same
-  * on every request). */
+  * on every request), and a query door parses no base doc. */
 class CurrentViewSpec extends SparkSpec {
   import spark.implicits._
 
@@ -53,5 +53,36 @@ class CurrentViewSpec extends SparkSpec {
       spark.sparkContext.removeSparkListener(listener)
       store.close()
     }
+  }
+
+  test("a current door read parses only the delta: no JsonToStructs over the base's scan") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    def leaves(p: SparkPlan): Seq[SparkPlan] = nodes(p).filter(n => n.children.isEmpty &&
+      !n.isInstanceOf[AdaptiveSparkPlanExec] && !n.isInstanceOf[QueryStageExec])
+    val store = DocumentStore(spark, Files.createTempDirectory("view-typed").toString + "/db")
+    try {
+      store.putAll((1 to 50).map(i => s"d$i" -> s"""{"v":$i}"""))
+      val edn = "{:find [?e ?v] :where [[?e :v ?v] [(> ?v 10)]]}"
+      assert(store.qPublic(edn, schema).fold(fail(_), _.count()) == 40) // base + typed base
+      store.put("d51", """{"v":51}""")
+      store.put("d13", """{"v":1}""")
+      store.delete("d12")
+      for (df <- Seq(store.q(edn, schema), store.qPublic(edn, schema)).map(_.fold(fail(_), identity))) {
+        val got = df.as[(String, Long)].collect().toMap
+        assert(got.size == 39 && got("d51") == 51L && !got.contains("d12") && !got.contains("d13"))
+        val plan = nodes(df.queryExecution.executedPlan)
+        assert(plan.exists(_.isInstanceOf[RDDScanExec]), "the read scans the base")
+        val parsing = plan.filter(_.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs])))
+        parsing.foreach(p => assert(leaves(p).forall(_.isInstanceOf[LocalTableScanExec]),
+          s"from_json over the base's scan:\n$p"))
+      }
+    } finally store.close()
   }
 }

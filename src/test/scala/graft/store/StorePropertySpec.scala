@@ -200,10 +200,36 @@ class StorePropertySpec extends SparkSpec {
 
   test("differential: the current view (db, asOf at or past now) after every op, against the scan and the model") {
     import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import org.apache.spark.sql.types.{LongType, StringType, StructType}
     import spark.implicits._
     def rows(df: DataFrame): Map[String, String] =
       df.select("id", "doc").as[(String, String)].collect().toMap
+    // the query doors (q, qPublic): an aggregate, a predicate and a ref join
+    val doorSchema = new StructType().add("v", LongType).add("ref", StringType)
+    val doors = Seq(
+      "{:find [?r (count ?e) (sum ?v)] :where [[?e :v ?v] [?e :ref ?r]]}",
+      "{:find [?e ?v] :where [[?e :v ?v] [(>= ?v 500)]]}",
+      "{:find [?e ?w] :where [[?e :ref ?r] [?r :v ?w]]}")
+    def doorModel(door: Int, snap: Map[String, String]): Set[Seq[String]] = {
+      val docs = snap.map { case (id, d) =>
+        id -> ("\"v\":(\\d+)".r.findFirstMatchIn(d).get.group(1).toLong,
+          "\"ref\":\"([^\"]+)\"".r.findFirstMatchIn(d).get.group(1)) }
+      door match {
+        case 0 => docs.values.groupBy(_._2).map { case (r, vs) =>
+          Seq(r, vs.size.toString, vs.map(_._1).sum.toString) }.toSet
+        case 1 => docs.collect { case (id, (v, _)) if v >= 500 => Seq(id, v.toString) }.toSet
+        case _ => docs.flatMap { case (id, (_, r)) => docs.get(r).map(t => Seq(id, t._1.toString)) }.toSet
+      }
+    }
+    def answer(e: Either[String, DataFrame]): Set[Seq[String]] =
+      e.fold(fail(_), _.collect().map(_.toSeq.map(String.valueOf)).toSet)
+    def publicOnly(snap: Map[String, String]) = snap.filterNot(_._1.startsWith(":"))
+    // a door read over the typed base shows a LogicalRDD of typed columns
+    def typedRead(df: DataFrame): Boolean =
+      df.queryExecution.analyzed.collectFirst { case r: LogicalRDD if r.output.exists(_.name == "v") => r }.isDefined
+    var cappedReads = 0
     for ((seed, nOps) <- Seq((31L, 20), (4242L, 20))) {
       val store = DocumentStore(spark,
         java.nio.file.Files.createTempDirectory(s"store-view-$seed").toString + "/db")
@@ -211,6 +237,8 @@ class StorePropertySpec extends SparkSpec {
         var model = Vector.empty[Version]
         var viewReads = 0
         var reads = 0
+        var typedReads = 0
+        var doorReads = 0
         def lastTx(): Long = store.latestSubmittedTx.get.getTime
         def current(id: String) = visible(model, id, store.now().getTime, Long.MaxValue)
         // the model's snapshot, grouped first: the bulk write makes ~1k ids
@@ -218,15 +246,16 @@ class StorePropertySpec extends SparkSpec {
           vs.filter(_.validFrom <= vt).maxByOption(v => (v.validFrom, v.txTime))
             .filterNot(_.deleted).map(id -> _.doc)
         }
-        def doc(v: Int) = s"""{"v":$v}"""
+        def doc(v: Int) = s"""{"v":$v,"ref":"${viewIds(v % viewIds.size)}"}"""
         val ops = samples(genViewOp, nOps, seed).toVector
         // one bulk write past the delta's bound mid-sequence, and one of
         // future-dated rows at the end: too many to carry, so the next base
         // is refused and the last reads take the scan
         def bulk(tag: String, off: Option[Long]) =
           VPutAll((1 to DocumentStore.MaxDelta + 5).map(i => s"$tag$i" -> i), off)
-        val seq = ops.take(nOps / 2) ++ Seq(bulk("bulk", None)) ++ ops.drop(nOps / 2) ++
-          Seq(bulk("later", Some(3600000L)), VPut("a", 1, None))
+        // a ':' id, which qPublic leaves out
+        val seq = Seq(VPut(":sys", 7, None)) ++ ops.take(nOps / 2) ++ Seq(bulk("bulk", None)) ++
+          ops.drop(nOps / 2) ++ Seq(bulk("later", Some(3600000L)), VPut("a", 1, None))
         for ((op, step) <- seq.zipWithIndex) {
           def vf(off: Option[Long]) = off.map(o => new Timestamp(store.now().getTime + o))
           op match {
@@ -286,11 +315,46 @@ class StorePropertySpec extends SparkSpec {
             assert(got == rows(store.scanAsOf(t, DocumentStore.MaxTxTime)),
               s"asOf($vt) diverged from the scan after step $step ($op) [seed $seed]")
           }
+          // one door per step, through q at `after` (against the model and
+          // the same EDN over the scan) and qPublic (against the model at a
+          // valid time inside the call)
+          def door(d: Int, schema: StructType): Unit = {
+            val t = new Timestamp(after)
+            val viaQ = store.q(doors(d), schema, t)
+            doorReads += 1
+            if (viaQ.exists(typedRead)) typedReads += 1
+            if (viaQ.exists(df => !typedRead(df) &&
+                df.queryExecution.analyzed.collectFirst { case r: LogicalRelation => r }.isEmpty))
+              cappedReads += 1
+            val got = answer(viaQ)
+            assert(got == doorModel(d, want(after)),
+              s"q door $d diverged from the model after step $step ($op) [seed $seed]:\n" +
+                s" got $got\n want ${doorModel(d, want(after))}")
+            assert(got == answer(graft.query.datalog.EdnDatalog.run(
+              store.relationOf(store.scanAsOf(t, DocumentStore.MaxTxTime), schema), doors(d))),
+              s"q door $d diverged from the scan after step $step ($op) [seed $seed]")
+          }
+          door(step % doors.size, doorSchema)
+          val (pb, pub, pa) = {
+            val b = store.now().getTime
+            val r = answer(store.qPublic(doors(step % doors.size), doorSchema))
+            (b, r, store.now().getTime)
+          }
+          assert(pub == doorModel(step % doors.size, publicOnly(want(pb))) ||
+            pub == doorModel(step % doors.size, publicOnly(want(pa))),
+            s"qPublic door ${step % doors.size} diverged after step $step ($op) [seed $seed]")
+          // more reader schemas than a base keeps typed: the ones past the
+          // cap read through the untyped view and answer the same
+          if (step == 3 || step == seq.size - 3)
+            (0 to DocumentStore.MaxTypedRelations).foreach(k =>
+              door(0, doorSchema.add(s"x$k", StringType)))
         }
         // the view, not the scan, answered most of those reads
         assert(viewReads * 2 > reads, s"only $viewReads of $reads current reads used the view")
+        assert(typedReads * 2 > doorReads, s"only $typedReads of $doorReads door reads were typed")
       } finally store.close()
     }
+    assert(cappedReads > 0, "no door read went past the typed-relation cap")
   }
 
   /** Speculative-op generator for the withTx differential: puts/deletes
