@@ -4,24 +4,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // instant semantics are defined UTC engine-wide (oracle parity for the
-      // NTZ events encoding); Verify/tests pin it — Bench must too so a
-      // spark-submit launch on a non-UTC machine measures the same plans
-      .config("spark.sql.session.timeZone", "UTC")
-      // Let AQE size post-shuffle partitions by bytes (advisory 64 MB), not
-      // by cluster parallelism: Spark's own guidance for busy clusters, and
-      // the right 100 TB posture — at bench scale it also stops KB-sized
-      // shuffles from being scheduled as `cpus` near-empty tasks per stage.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // apply AQE partition coalescing INSIDE cached-plan materialization
-      // too (off by default) — persisted signature/class tables otherwise
-      // keep full-width KB-sized partitions and every scan pays the tasks
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Dev loop: SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run (driver
     // leaves it unset and always measures the full surface).
@@ -367,4 +350,26 @@ object Bench {
         .forall(_.group(1) == sfDir)
       cpusOk && sfOk
     } catch { case _: Exception => false })
+
+  /** The session every bench measurement runs in: `cpus` local cores and
+    * as many shuffle partitions. */
+  private[graft] def session(cpus: String): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      // instant semantics are defined UTC engine-wide (oracle parity for the
+      // NTZ events encoding); Verify/tests pin it — Bench must too so a
+      // spark-submit launch on a non-UTC machine measures the same plans
+      .config("spark.sql.session.timeZone", "UTC")
+      // Let AQE size post-shuffle partitions by bytes (advisory 64 MB), not
+      // by cluster parallelism: Spark's own guidance for busy clusters, and
+      // the right 100 TB posture — at bench scale it also stops KB-sized
+      // shuffles from being scheduled as `cpus` near-empty tasks per stage.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      // apply AQE partition coalescing INSIDE cached-plan materialization
+      // too (off by default) — persisted signature/class tables otherwise
+      // keep full-width KB-sized partitions and every scan pays the tasks
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
 }

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,57 +15,6 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.VersionedDoc
 
-/** Bitemporal document store: the Crux semantics the reference exposes to
-  * every stored function (`/root/reference/src/dataworks/db/app_db.clj:95-113`,
-  * `/root/reference/src/dataworks/db/user_db.clj:28-48`), rebuilt as an
-  * append-only versioned Parquet table + window-based as-of views.
-  *
-  * Operations (SURVEY.md §2.1):
-  *  - S1 `put`            — upsert, valid-from = now
-  *  - S2 `put` @ future   — caller-supplied valid-from; invisible until due
-  *  - S3 `match`+put      — optimistic concurrency (compare current, then append)
-  *  - S4 `cas`            — compare-and-swap payloads
-  *  - S5 `delete`         — tombstone row ending validity
-  *  - S6 `await-tx`       — synchronous commit (writes here are synchronous)
-  *  - Q1 `entity`         — whole doc at a snapshot
-  *  - Q10/Q11 `asOf`      — valid-time / bitemporal snapshot views
-  *
-  * Write path & scale: Crux serializes all transactions through a single
-  * Kafka tx-log (`/root/reference/example-config.edn:3-14`); we funnel
-  * writes through one commit point per store instance (a JVM lock +
-  * monotonic tx clock — the moral equivalent for a driver-owned control
-  * plane; match/cas REQUIRE that serialization, SURVEY.md §7.4 risk 1).
-  * Data layout: rows are partitioned by `valid_date` so as-of reads prune
-  * historical partitions, and each transaction is one small parquet file
-  * — at warehouse scale you'd compact these, but the read view is
-  * identical. A driver-side transaction (put, putAll, delete, matchPut)
-  * writes its file on the driver through Spark's own parquet writer, so
-  * a commit runs no Spark job; [[putBatch]], whose rows never reach the
-  * driver, appends with a write job.
-  *
-  * Read path: `asOf(vt, tt)` = filter(valid_from <= vt && tx_time <= tt)
-  * → row_number() over (partition by id, order by valid_from desc, tx_time
-  * desc) = 1 → drop tombstones. The filter is pushed to parquet; the
-  * window shuffles by id exactly once.
-  *
-  * Current reads (`asOf(vt)` with no tx-time cut, hence [[db]], [[q]],
-  * [[qPublic]] and the alert poll) skip that scan: Crux answers `(db node)`
-  * from maintained indexes, and this store keeps the moral equivalent — a
-  * BASE (the live top-1 version per id as of a base time vt0, materialized
-  * once with `localCheckpoint`, so it is lineage-free and no compaction
-  * can swap files under it) plus a driver-side DELTA (the rows this
-  * instance appended since vt0, and rows still future-dated at vt0). A
-  * current read picks the delta's winners at its valid time on the driver,
-  * filters their ids out of the base's own scan, and unions the live
-  * winners back in as a local relation — no timestamp literal or id list
-  * enters the plan, so its generated code is the same on every request. The base is dropped, and rebuilt on the next current read, by
-  * a retroactive row (validFrom < vt0), a [[putBatch]], an [[evict]], or a
-  * delta past [[DocumentStore.MaxDelta]] rows; [[compact]] keeps it.
-  * The query doors ([[q]], [[qPublic]]) read the base already typed: the
-  * base's docs parsed by a reader's schema are materialized once per
-  * (schema, public-only) and the same overlay applies, with only the live
-  * delta winners parsed per read.
-  */
 /** Speculative transaction op for [[DocumentStore.withTx]] — the crux
   * `::xt/put` / `::xt/delete` / `::xt/match` op shapes. A failed Match
   * ABORTS the speculative transaction (withTx returns None — crux's nil),
@@ -81,6 +30,65 @@ object TxOp {
   final case class Match(id: String, expected: Option[String]) extends TxOp
 }
 
+/** Bitemporal document store: the Crux semantics the reference exposes to
+  * every stored function (dataworks `src/dataworks/db/app_db.clj:95-113`,
+  * `src/dataworks/db/user_db.clj:28-48`), rebuilt as an append-only
+  * versioned Parquet table + window-based as-of views.
+  *
+  * Operations (SURVEY.md §2.1):
+  *  - S1 `put`            — upsert, valid-from = now
+  *  - S2 `put` @ future   — caller-supplied valid-from; invisible until due
+  *  - S3 `match`+put      — optimistic concurrency (compare current, then append)
+  *  - S4 `cas`            — compare-and-swap payloads
+  *  - S5 `delete`         — tombstone row ending validity
+  *  - S6 `await-tx`       — synchronous commit (writes here are synchronous)
+  *  - Q1 `entity`         — whole doc at a snapshot
+  *  - Q10/Q11 `asOf`      — valid-time / bitemporal snapshot views
+  *
+  * Write path & scale: Crux serializes all transactions through a single
+  * Kafka tx-log (dataworks `example-config.edn:3-14`); we funnel
+  * writes through one commit point per store instance (a JVM lock +
+  * monotonic tx clock — the moral equivalent for a driver-owned control
+  * plane; match/cas REQUIRE that serialization, SURVEY.md §7.4 risk 1).
+  * Data layout: rows are partitioned by `valid_date` so as-of reads prune
+  * historical partitions, and each transaction is one small parquet file
+  * — at warehouse scale you'd compact these, but the read view is
+  * identical. A driver-side transaction (put, putAll, delete, matchPut)
+  * writes its file on the driver through Spark's own parquet writer, so
+  * a commit runs no Spark job; [[putBatch]], whose rows never reach the
+  * driver, appends with a write job.
+  *
+  * Read path: one resolver decides visibility for every log read. Its
+  * cut keeps the versions with valid_from <= vt and tx_time <= tt (plus a
+  * `valid_date` bound, so parquet prunes later date partitions); then
+  * row_number() over (partition by id, order by valid_from desc, tx_time
+  * desc) = 1 keeps each id's newest version, tombstone included, and the
+  * caller drops tombstones. [[asOf]]'s scan, the current view's base and
+  * [[withTx]]'s snapshot all read through it; the window shuffles by id
+  * once. Point reads ([[entity]], [[entityTx]], withTx's Match and the
+  * control plane's tombstone check) read through one `versionAt`: the
+  * same cut with the id pushed to parquet, newest first, top 1, a single
+  * stage with no shuffle.
+  *
+  * Current reads (`asOf(vt)` with no tx-time cut, hence [[db]], [[q]],
+  * [[qPublic]] and the alert poll) skip that scan: Crux answers `(db node)`
+  * from maintained indexes, and this store keeps the moral equivalent — a
+  * BASE (the live top-1 version per id as of a base time vt0, materialized
+  * once with `localCheckpoint`, so it is lineage-free and no compaction
+  * can swap files under it) plus a driver-side DELTA (the rows this
+  * instance appended since vt0, and rows still future-dated at vt0). A
+  * current read picks the delta's winners at its valid time on the driver,
+  * filters their ids out of the base's own scan, and unions the live
+  * winners back in as a local relation — no timestamp literal or id list
+  * enters the plan, so its generated code is the same on every request.
+  * The base is dropped, and rebuilt on the next current read, by a
+  * retroactive row (validFrom < vt0), a [[putBatch]], an [[evict]], or a
+  * delta past [[DocumentStore.MaxDelta]] rows; [[compact]] keeps it.
+  * The query doors ([[q]], [[qPublic]]) read the base already typed: the
+  * base's docs parsed by a reader's schema are materialized once per
+  * (schema, public-only) and the same overlay applies, with only the live
+  * delta winners parsed per read.
+  */
 class DocumentStore(val spark: SparkSession, val path: String) {
   import spark.implicits._
 
@@ -526,26 +534,45 @@ class DocumentStore(val spark: SparkSession, val path: String) {
 
   /** The version-log scan behind every read the current view does not
     * answer — and the reference the view is tested against. */
-  private[store] def scanAsOf(validTime: Timestamp, txTime: Timestamp): DataFrame = {
-    val w = Window.partitionBy("id")
-      .orderBy(col("validFrom").desc, col("txTime").desc)
-    // valid_date = date(validFrom), so validFrom <= vt implies
-    // valid_date <= date(vt) + slack: the redundant predicate on the
-    // DIRECTORY partition column lets Spark prune every post-snapshot date
-    // partition from the scan (PlanQualitySpec pins this) — the row-level
-    // validFrom cut alone cannot prune directories. The 2-day slack makes
-    // the prune timezone-safe: valid_date was rendered in the WRITER
-    // session's timezone, to_date(vt) in the READER's, and two renderings
-    // of one instant can differ by up to two calendar days across extreme
-    // zones (UTC-12 vs UTC+14). Exactness still comes from the row-level
-    // instant comparison; the slack only admits two extra directories.
-    versionsRaw()
-      .filter(col("valid_date") <= date_add(to_date(lit(validTime)), 2) &&
-        col("validFrom") <= lit(validTime) && col("txTime") <= lit(txTime))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && !col("deleted"))
-      .select("id", "validFrom", "txTime", "doc")
-  }
+  private[store] def scanAsOf(validTime: Timestamp, txTime: Timestamp): DataFrame =
+    latest(versionsRaw(), validTime, txTime).filter(!col("deleted")).drop("deleted")
+
+  /** The cut every as-of read applies: versions valid at `vt` and
+    * committed by `tt`. valid_date = date(validFrom), so validFrom <= vt
+    * implies valid_date <= date(vt) + slack: the redundant predicate on the
+    * DIRECTORY partition column lets Spark prune every post-snapshot date
+    * partition from the scan (PlanQualitySpec pins this) — the row-level
+    * validFrom cut alone cannot prune directories. The 2-day slack makes
+    * the prune timezone-safe: valid_date was rendered in the WRITER
+    * session's timezone, to_date(vt) in the READER's, and two renderings
+    * of one instant can differ by up to two calendar days across extreme
+    * zones (UTC-12 vs UTC+14). Exactness still comes from the row-level
+    * instant comparison; the slack only admits two extra directories. */
+  private def cut(raw: DataFrame, vt: Timestamp, tt: Timestamp): DataFrame =
+    raw.filter(col("valid_date") <= date_add(to_date(lit(vt)), 2) &&
+      col("validFrom") <= lit(vt) && col("txTime") <= lit(tt))
+
+  /** The as-of order, newest first: the later valid time wins, then the
+    * later tx time ([[DocumentStore.AsOfOrder]] on the driver). */
+  private val newestFirst = Seq(col("validFrom").desc, col("txTime").desc)
+
+  /** The resolver: each id's newest version at the cut, tombstones kept,
+    * as (id, validFrom, txTime, deleted, doc) — one shuffle by id. */
+  private def latest(raw: DataFrame, vt: Timestamp, tt: Timestamp): DataFrame =
+    cut(raw, vt, tt)
+      .withColumn("rn", row_number().over(Window.partitionBy("id").orderBy(newestFirst: _*)))
+      .filter(col("rn") === 1)
+      .select("id", "validFrom", "txTime", "deleted", "doc")
+
+  /** The point read: `id`'s newest version at `vt` with no tx-time cut,
+    * tombstone included — the resolver's cut with the id pushed to
+    * parquet, newest first, top 1: one stage, no shuffle. */
+  private[graft] def versionAt(id: String, vt: Timestamp): Option[VersionedDoc] =
+    retryOnSwap {
+      cut(versionsRaw().filter(col("id") === id), vt, DocumentStore.MaxTxTime)
+        .drop("valid_date").orderBy(newestFirst: _*).limit(1)
+        .as[VersionedDoc].collect().headOption
+    }
 
   def asOf(validTime: Timestamp): DataFrame = asOf(validTime, DocumentStore.MaxTxTime)
 
@@ -572,19 +599,14 @@ class DocumentStore(val spark: SparkSession, val path: String) {
     * into the delta, one window job materializes the base. */
   private def buildView(vt0: Long): Option[DocumentStore.View] = {
     val raw = versionsRaw()
-    val cut = lit(new Timestamp(vt0))
-    val future = raw.filter(col("validFrom") > cut).drop("valid_date")
+    val at = new Timestamp(vt0)
+    val future = raw.filter(col("validFrom") > lit(at)).drop("valid_date")
       .as[VersionedDoc].limit(DocumentStore.MaxDelta + 1).collect().toVector
     if (future.size > DocumentStore.MaxDelta) {
       noViewUntil = System.currentTimeMillis() + DocumentStore.ViewRetryMs
       return None
     }
-    val w = Window.partitionBy("id")
-      .orderBy(col("validFrom").desc, col("txTime").desc)
-    val top = raw.filter(col("validFrom") <= cut)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && !col("deleted"))
-      .select("id", "validFrom", "txTime", "doc")
+    val top = latest(raw, at, DocumentStore.MaxTxTime).filter(!col("deleted")).drop("deleted")
     val (df, _, rdd) =
       DatasetBridge.materializeWithCount(top, reliable = false)
     Some(DocumentStore.View(new DocumentStore.Base(vt0, df, rdd), future))
@@ -611,7 +633,7 @@ class DocumentStore(val spark: SparkSession, val path: String) {
       // delta winners at vt by the as-of order (validFrom, txTime); each
       // beats its id's base row, which is older on both clocks
       (x.base, x.delta.filter(_.validFrom.getTime <= vt).groupBy(_.id).values
-        .map(_.maxBy(r => (r.validFrom.getTime, r.txTime.getTime))).toSeq)
+        .map(_.max(DocumentStore.AsOfOrder)).toSeq)
     }
   }
 
@@ -641,20 +663,20 @@ class DocumentStore(val spark: SparkSession, val path: String) {
     * [...])`. The speculative rows ride a txTime strictly after every
     * committed one (and each op after its predecessor, so crux's in-order
     * apply semantics hold: the LAST put of an id wins, a later delete
-    * hides an earlier put), then flow through the SAME as-of window as
-    * [[db]] — one code path decides visibility for committed and
+    * hides an earlier put), then flow through the SAME resolver as
+    * [[asOf]] — one code path decides visibility for committed and
     * speculative rows alike. The store itself is untouched: no append,
     * no tx-clock advance; [[db]]/[[entity]] after the call are oblivious.
     *
     * A `TxOp.Match` asserts the doc visible AT THAT POINT of the op
     * sequence (earlier speculative ops count — crux's in-order apply);
     * a failed match ABORTS: withTx returns None, crux's nil. Match
-    * evaluation mirrors the plan's window exactly on the driver — the
-    * committed candidate is one id-pushed, partition-pruned top-1 read
-    * (memoized per id), compared by the same (validFrom, txTime) rank
-    * against the speculative rows so far — so "what Match saw" and
-    * "what the returned snapshot shows" can never disagree. Cost: one
-    * bounded Spark job per DISTINCT matched id, driver memory O(ops).
+    * evaluation mirrors the resolver exactly on the driver — the
+    * committed candidate is the point read `versionAt` (memoized per id),
+    * ranked by the same as-of order against the speculative rows so far —
+    * so "what Match saw" and "what the returned snapshot shows" can never
+    * disagree. Cost: one single-stage Spark job per DISTINCT matched id,
+    * driver memory O(ops).
     *
     * Result schema matches [[db]]: (id, validFrom, txTime, doc). */
   def withTx(ops: Seq[TxOp], validTime: Timestamp = now()): Option[DataFrame] = {
@@ -670,55 +692,29 @@ class DocumentStore(val spark: SparkSession, val path: String) {
     // makes them outrank committed rows at the cut and keeps crux's
     // in-order last-put-wins among themselves.
     val vt = validTime
-    // committed top-1 candidate per matched id: (validFrom, txTime,
-    // deleted, doc) under the same vt cut the plan applies
-    val committedTop = scala.collection.mutable.Map
-      .empty[String, Option[(Long, Long, Boolean, String)]]
-    def committed(id: String): Option[(Long, Long, Boolean, String)] =
-      committedTop.getOrElseUpdate(id, retryOnSwap {
-        versionsRaw()
-          .filter(col("id") === id &&
-            col("valid_date") <= date_add(to_date(lit(vt)), 2) &&
-            col("validFrom") <= lit(vt))
-          .orderBy(col("validFrom").desc, col("txTime").desc).limit(1)
-          .select("validFrom", "txTime", "deleted", "doc")
-          .collect().headOption.map(r => (r.getTimestamp(0).getTime,
-            r.getTimestamp(1).getTime, r.getBoolean(2), r.getString(3)))
-      })
-    val specRows = Vector.newBuilder[VersionedDoc]
-    var specSoFar = List.empty[VersionedDoc] // newest first
+    // the committed candidate per matched id, read once
+    val committed = scala.collection.mutable.Map.empty[String, Option[VersionedDoc]]
+    var spec = Vector.empty[VersionedDoc] // the speculative rows so far
     ops.zipWithIndex.foreach {
       case (TxOp.Put(id, doc, vf), i) =>
         val v = VersionedDoc(id, vf.getOrElse(vt),
           new Timestamp(base + 1 + i), deleted = false, doc)
-        specRows += v; specSoFar ::= v
+        spec :+= v
       case (TxOp.Delete(id, vf), i) =>
         val v = VersionedDoc(id, vf.getOrElse(vt),
           new Timestamp(base + 1 + i), deleted = true, doc = null)
-        specRows += v; specSoFar ::= v
+        spec :+= v
       case (TxOp.Match(id, expected), _) =>
-        val candidates =
-          committed(id).toSeq ++
-            specSoFar.filter(v => v.id == id && v.validFrom.getTime <= vt.getTime)
-              .map(v => (v.validFrom.getTime, v.txTime.getTime, v.deleted, v.doc))
-        val visible = candidates
-          .sortBy(c => (c._1, c._2)).lastOption
-          .filterNot(_._3).map(_._4)
+        val visible = (committed.getOrElseUpdate(id, versionAt(id, vt)) ++
+          spec.filter(v => v.id == id && v.validFrom.getTime <= vt.getTime))
+          .maxOption(DocumentStore.AsOfOrder).filterNot(_.deleted).map(_.doc)
         if (visible != expected) return None // crux: failed match aborts → nil
     }
-    val rows = specRows.result()
     val unioned =
-      if (rows.isEmpty) versionsRaw() // all-Match op list that passed
-      else versionsRaw().unionByName(rows.toDS().toDF()
+      if (spec.isEmpty) versionsRaw() // all-Match op list that passed
+      else versionsRaw().unionByName(spec.toDS().toDF()
         .withColumn("valid_date", to_date(col("validFrom"))))
-    val w = Window.partitionBy("id")
-      .orderBy(col("validFrom").desc, col("txTime").desc)
-    Some(unioned
-      .filter(col("valid_date") <= date_add(to_date(lit(vt)), 2) &&
-        col("validFrom") <= lit(vt))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && !col("deleted"))
-      .select("id", "validFrom", "txTime", "doc"))
+    Some(latest(unioned, vt, DocumentStore.MaxTxTime).filter(!col("deleted")).drop("deleted"))
   }
 
   /** [[withTx]] convenience: one entity's doc in the speculative view
@@ -752,48 +748,18 @@ class DocumentStore(val spark: SparkSession, val path: String) {
   /** Q1: entity lookup — current doc payload for `id`, if visible. */
   def entity(id: String): Option[String] = entity(id, now())
 
-  def entity(id: String, validTime: Timestamp): Option[String] = retryOnSwap {
-    // id filter applied BEFORE the window so parquet only surfaces this
-    // entity's versions (predicate pushdown; no full-table window).
-    val w = Window.partitionBy("id")
-      .orderBy(col("validFrom").desc, col("txTime").desc)
-    versionsRaw() // same 2-day TZ slack on the partition prune as asOf()
-      .filter(col("id") === id &&
-        col("valid_date") <= date_add(to_date(lit(validTime)), 2) &&
-        col("validFrom") <= lit(validTime))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && !col("deleted"))
-      .select("doc")
-      .as[String].collect().headOption
-  }
+  def entity(id: String, validTime: Timestamp): Option[String] =
+    versionAt(id, validTime).filterNot(_.deleted).map(_.doc)
 
   /** Crux `entity-tx` — the bitemporal coordinates of the version that
     * makes `entity(id, validTime)` answer: (validFrom = crux valid-time,
     * txTime = crux tx-time). None when the entity is absent or
     * tombstoned at that cut, exactly when `entity` is None (crux returns
-    * nil then too). Same pushed id filter + window as the payload read. */
+    * nil then too). */
   def entityTx(id: String, validTime: Timestamp): Option[(Timestamp, Timestamp)] =
-    retryOnSwap {
-      val w = Window.partitionBy("id")
-        .orderBy(col("validFrom").desc, col("txTime").desc)
-      versionsRaw()
-        .filter(col("id") === id &&
-          col("valid_date") <= date_add(to_date(lit(validTime)), 2) &&
-          col("validFrom") <= lit(validTime))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1 && !col("deleted"))
-        .select("validFrom", "txTime")
-        .collect().headOption.map(r =>
-          (r.getTimestamp(0), r.getTimestamp(1)))
-    }
+    versionAt(id, validTime).filterNot(_.deleted).map(v => (v.validFrom, v.txTime))
 
   def entityTx(id: String): Option[(Timestamp, Timestamp)] = entityTx(id, now())
-
-  /** Typed view of the history for Dataset-style callers. */
-  def history(): Dataset[VersionedDoc] = {
-    versions()
-      .select("id", "validFrom", "txTime", "deleted", "doc").as[VersionedDoc]
-  }
 
   /** Crux `entity-history`: the full version chain of ONE entity — every
     * (validFrom, txTime) version INCLUDING tombstones, newest first (oldest
@@ -803,9 +769,7 @@ class DocumentStore(val spark: SparkSession, val path: String) {
     * rows; no window is needed — a chain is one entity's versions. */
   def history(id: String, asc: Boolean = false): DataFrame = {
     val chain = versions().filter(col("id") === id)
-    (if (asc) chain.orderBy(col("validFrom").asc, col("txTime").asc)
-     else chain.orderBy(col("validFrom").desc, col("txTime").desc))
-      .select("id", "validFrom", "txTime", "deleted", "doc")
+    if (asc) chain.orderBy("validFrom", "txTime") else chain.orderBy(newestFirst: _*)
   }
 
   // ------------------------------------------------------------ change feed
@@ -968,6 +932,11 @@ object DocumentStore {
     * would overflow the long — the >> 12 keeps the scaled value in range
     * while staying ~71k years in the future. */
   private[store] val MaxTxTime = new Timestamp(Long.MaxValue >> 12)
+
+  /** The as-of order on the driver, oldest first: valid time, then tx
+    * time — the order of the resolver's window. */
+  private val AsOfOrder: Ordering[VersionedDoc] =
+    Ordering.by(r => (r.validFrom.getTime, r.txTime.getTime))
 
   /** The materialized base: live top-1 version per id as of `vt0`, as
     * (id, validFrom, txTime, doc), backed by the locally checkpointed

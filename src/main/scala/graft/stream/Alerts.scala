@@ -31,12 +31,18 @@ class AlertScheduler(store: DocumentStore,
   private implicit val formats: Formats = DefaultFormats
   @volatile private var exec: Option[ScheduledExecutorService] = None
   @volatile private var firedCount: Long = 0L
+  @volatile private var skippedCount: Long = 0L
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Cap on the id-probe fan-in before tick falls back to the one-pass
     * plan (see the scale note on [[tick]]). */
   private val maxProbeIds = 5000
 
   def fired: Long = firedCount
+
+  /** Polls that failed and were skipped (each logged at warn with its
+    * cause); the next poll retries. */
+  def skipped: Long = skippedCount
 
   /** One poll: due (= now-visible) alert docs → claim → handle → delete.
     * The WHOLE body is guarded: `scheduleWithFixedDelay` suppresses all
@@ -108,9 +114,15 @@ class AlertScheduler(store: DocumentStore,
             store.delete(id) // alert.clj:31
           }
         }
-      } catch { case scala.util.control.NonFatal(_) => () } // a bad alert doc never kills the loop
+      } catch { // a bad alert doc never kills the loop
+        case scala.util.control.NonFatal(e) => log.warn(s"alert '$id' skipped this poll", e)
+      }
     }
-  } catch { case scala.util.control.NonFatal(_) => () } // transient scan failure: retry next poll
+  } catch { // transient scan failure: retry next poll
+    case scala.util.control.NonFatal(e) =>
+      skippedCount += 1
+      log.warn("alert poll skipped", e)
+  }
 
   def start(): Unit = synchronized {
     if (exec.isEmpty) {

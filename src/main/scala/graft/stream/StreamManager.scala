@@ -391,6 +391,11 @@ class StreamManager(val topology: Topology) {
               // would terminate the control-plane query itself, permanently
               try store.entity(id) match {
                 case Some(doc) => parse(doc) match {
+                  // the deploying instance applied this spec before its
+                  // broadcast: applying it again would restart the same
+                  // queries, and a stop during a new query's first offset
+                  // write leaves a checkpoint Spark refuses to resume
+                  case Some(n) if topology.node(n.name.full).contains(n) => applyGraph()
                   case Some(n) => updateNode(n).left.foreach(err =>
                     log.warn(s"control-plane update rejected for '$id': $err"))
                   case None =>
@@ -409,21 +414,15 @@ class StreamManager(val topology: Topology) {
                   // validFrom (S2 scheduled visibility) — a scheduled
                   // create/update broadcast must not be misread as a delete
                   // and tear down a live same-named node (ADVICE r11).
-                  // Distinguish via the version chain (which includes
-                  // tombstones and future versions; compaction preserves
-                  // both): tear down only when the CURRENT cut of the
-                  // chain ends in an explicit tombstone.
+                  // Distinguish via the newest version at store.now(), the
+                  // cut entity() reads, tombstones included: tear down only
+                  // when it is an explicit tombstone.
                   if (id.startsWith(":stream/")) {
                     val local = graft.query.Functions.idName(id)
                     topology.nodes.keys
                       .find(f => f.substring(f.lastIndexOf('/') + 1) == local)
                       .foreach { full =>
-                        val nowTs = new java.sql.Timestamp(System.currentTimeMillis())
-                        val current = store.history(id) // newest-first chain
-                          .filter(org.apache.spark.sql.functions
-                            .col("validFrom") <= org.apache.spark.sql.functions.lit(nowTs))
-                          .select("deleted").limit(1).collect().headOption
-                        if (current.exists(_.getBoolean(0))) {
+                        if (store.versionAt(id, store.now()).exists(_.deleted)) {
                           log.info(s"control-plane: '$id' tombstoned — deleting node $full")
                           deleteNode(full)
                         } else log.info(

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Forensic probe (guide §1): run one gate the way Bench does (warmup pass,
   * then a timed pass) and print one line per Spark JOB with its callsite +
   * description — the job-count breakdown BenchStatsSpec budgets can't show.
@@ -12,14 +10,7 @@ object JobCensus {
     val gate = if (args.nonEmpty) args(0) else "datalog_pull_recursive"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(gate)
     // warmup (bench parity: models/staged artifacts/JIT amortized)

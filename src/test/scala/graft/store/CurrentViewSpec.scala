@@ -2,7 +2,7 @@ package graft.store
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types._
 
@@ -11,7 +11,8 @@ import graft.SparkSpec
 /** The current view's cost contract: once its base is built, a write
   * followed by a current read touches no version-log file, the read's
   * plan carries no timestamp literal (so its generated code is the same
-  * on every request), and a query door parses no base doc. */
+  * on every request), and a query door parses no base doc. A point read
+  * of the version log is one job with no shuffle. */
 class CurrentViewSpec extends SparkSpec {
   import spark.implicits._
 
@@ -84,5 +85,43 @@ class CurrentViewSpec extends SparkSpec {
           s"from_json over the base's scan:\n$p"))
       }
     } finally store.close()
+  }
+
+  test("a point read runs one job with no shuffle stage: entity, entityTx and a withTx Match") {
+    val store = DocumentStore(spark, Files.createTempDirectory("view-point").toString + "/db")
+    val prefix = s"point-read-${System.nanoTime()}-"
+    // stages per job, by read: a shuffle would add a map stage (in its
+    // own job under AQE) before the result stage
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(prefix))
+          .foreach(g => stages.add(g.stripPrefix(prefix) -> e.stageInfos.size))
+    }
+    def read[T](name: String)(f: => T): T = {
+      spark.sparkContext.setJobGroup(prefix + name, name)
+      try f finally spark.sparkContext.clearJobGroup()
+    }
+    try {
+      store.put("a", """{"v":1}""")
+      store.put("a", """{"v":2}""")
+      store.put("b", """{"v":3}""")
+      store.delete("b")
+      assert(store.entity("b").isEmpty) // first-use class loading stays out of the count
+      spark.sparkContext.addSparkListener(listener)
+      assert(read("entity")(store.entity("a")) == Some("""{"v":2}"""))
+      assert(read("entityTx")(store.entityTx("a")).isDefined)
+      assert(read("withTx Match")(store.withTx(Seq(
+        TxOp.Match("a", Some("""{"v":2}""")), TxOp.Put("c", """{"v":4}""")))).isDefined)
+      org.apache.spark.sql.graft.DatasetBridge.drainListenerBus(spark)
+      val byRead = stages.toArray(Array.empty[(String, Int)]).toSeq.groupBy(_._1).map {
+        case (name, jobs) => name -> jobs.map(_._2) }
+      assert(byRead == Map("entity" -> Seq(1), "entityTx" -> Seq(1), "withTx Match" -> Seq(1)),
+        s"stages per job, by read: $byRead")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      store.close()
+    }
   }
 }

@@ -80,14 +80,21 @@ class AlertsSpec extends SparkSpec {
   }
 
   test("a transient store failure never kills the poll loop") {
-    // tick() against a store path that throws (deleted out from under it)
     val store = freshStore()
     store.put("x/alert", """{"alertHandler":"h"}""")
     val sched = new AlertScheduler(store, new FunctionRegistry)
-    // blow away the backing files so the scan fails
-    val p = new org.apache.hadoop.fs.Path(store.path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    // corrupt the transaction file, so the poll's scan fails reading it
+    val root = new org.apache.hadoop.fs.Path(store.path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listFiles(root, true)
+    val parts = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(_.getName.startsWith("part-")).toList
+    assert(parts.size == 1, s"one transaction file: $parts")
+    val out = fs.create(parts.head, true)
+    try out.write("not parquet".getBytes("UTF-8")) finally out.close()
+    assert(sched.skipped == 0)
     sched.tick() // must not throw — scheduleWithFixedDelay would never run again
+    assert(sched.skipped == 1, "the failed poll is counted as skipped")
   }
 
   test("two scheduler instances: CAS claim lets only one fire") {

@@ -89,6 +89,29 @@ class ControlPlaneSpec extends SparkSpec {
     mgr.stopAll()
   }
 
+  test("a broadcast of an already-applied spec restarts no query") {
+    val store = DocumentStore(spark,
+      Files.createTempDirectory("cp-same").toString + "/db")
+    val io = new MemoryIO(spark)
+    val mgr = new StreamManager(new Topology(io))
+    store.put(":stream/input", """{"name":"kafka/input","upstream":[]}""")
+    store.put(":stream/process", specJson("TRY_CAST(value AS DOUBLE) + 1"))
+    store.put(":stream/output", """{"name":"kafka/output","upstream":["stream/process"]}""")
+    mgr.bootstrapFromStore(store)
+    mgr.startControlPlane(store, NodeSpec.parse)
+    val before = mgr.runningQueries("kafka/output")
+    // the deploying instance's own broadcast: the stored spec is the one
+    // already running here
+    io.publish(mgr.controlTopic, "k", ":stream/process")
+    mgr.processAllAvailable()
+    assert(mgr.runningQueries.get("kafka/output").contains(before) && before.isActive,
+      "an unchanged spec must not stop and restart the sink")
+    io.publish("kafka/input", "a", "10")
+    mgr.processAllAvailable()
+    assert(io.collected("output").map(_.getAs[Double]("value")) == Seq(11.0))
+    mgr.stopAll()
+  }
+
   test("control-plane event for a TOMBSTONED doc deletes the node on peers (review r11)") {
     val store = DocumentStore(spark,
       Files.createTempDirectory("cp-del").toString + "/db")
