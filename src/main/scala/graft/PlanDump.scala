@@ -1,13 +1,12 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement tool (guide §1): dump `.explain("formatted")` for declared
   * queries to text files, so plan claims (Exchange counts, join strategies,
   * PushedFilters) are auditable without running Spark. Usage:
   *   runMain graft.PlanDump <outDir> <suffix> [q1,q2,...]
   * writes `<outDir>/<query>_<suffix>.txt` for each named query (all queries
-  * when the list is omitted). Session config mirrors Bench so the dumped
+  * when the list is omitted). It runs in Bench's session, so the dumped
   * plans are the ones the bench measures. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,14 +17,7 @@ object PlanDump {
     val names: Seq[String] =
       if (args.length > 2) args(2).split(',').map(_.trim).filter(_.nonEmpty).toSeq
       else SparkEntry.queries.keys.toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

@@ -1,11 +1,14 @@
 package graft
 
+import graft.obs.Profile
+
 /** Job-count budgets for the ITERATIVE TRAINERS — the gates whose cost is
   * dominated by scheduling (model rounds), not data. The round-3 job
-  * explosions were caught by eyeballing `SPARK_GRAFT_BENCH_STATS=1`
-  * output; these budgets turn a recurrence (a lost reused exchange, AQE
-  * re-planning inside a round, an accidental per-round action) into a CI
-  * failure, the way GraphSpec pins connected-components rounds.
+  * explosions were caught by eyeballing per-gate job counts (now the
+  * bench's `job_stats` rows; `JobCensus` lists a gate's jobs); these
+  * budgets turn a recurrence (a lost reused exchange, AQE re-planning
+  * inside a round, an accidental per-round action) into a CI failure, the
+  * way GraphSpec pins connected-components rounds.
   *
   * Budgets are measured ceilings + slack, not aspirations: a trainer that
   * doubles its job count has changed plan shape, whatever the wall-clock
@@ -14,18 +17,15 @@ package graft
   */
 class BenchStatsSpec extends SparkSpec {
 
-  /** Run `name` from SparkEntry.queries under a job group; return jobs. */
+  /** Jobs started by running `name` from SparkEntry.queries. */
   private def jobsFor(name: String): Int = {
     // a cold ModelCache makes the count deterministic: each budget below
     // INCLUDES the gate's own training jobs (the solo-run worst case)
     graft.core.ModelCache.clear()
-    val group = s"bench-stats-$name"
-    spark.sparkContext.setJobGroup(group, s"BenchStatsSpec $name")
-    try SparkEntry.queries(name)(spark, sf("sf0.001")).count()
-    finally spark.sparkContext.clearJobGroup()
+    val p = Profile(spark)(SparkEntry.queries(name)(spark, sf("sf0.001")).count())
     graft.core.CacheRegistry.unpersistAll()
-    org.apache.spark.sql.graft.DatasetBridge.drainListenerBus(spark)
-    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    p.result.get
+    p.jobs.size
   }
 
   // (gate, budget): measured at r8 + ~50% slack. PageRank is

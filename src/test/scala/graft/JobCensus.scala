@@ -1,8 +1,11 @@
 package graft
 
+import graft.obs.Profile
+
 /** Forensic probe (guide §1): run one gate the way Bench does (warmup pass,
-  * then a timed pass) and print one line per Spark JOB with its callsite +
-  * description — the job-count breakdown BenchStatsSpec budgets can't show.
+  * then a timed pass) and print one line per Spark JOB with its duration,
+  * call site (its result stage's name) and description — the job-count
+  * breakdown BenchStatsSpec budgets can't show.
   * Usage: Test/runMain graft.JobCensus <gate> [sfDir] [cpus]
   */
 object JobCensus {
@@ -17,29 +20,14 @@ object JobCensus {
     try fn(spark, sfDir).count() catch { case e: Throwable =>
       System.err.println(s"[census] warmup failed: ${e.getMessage}") }
     graft.core.CacheRegistry.unpersistAll()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobStart.put(j.jobId, j.time)
-        val desc = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        val site = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
-        jobs.add(f"job ${j.jobId}%3d stages=${j.stageInfos.size}%-2d tasks=${j.stageInfos.map(_.numTasks).sum}%-4d $site%-40s $desc")
-      }
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val dt = Option(jobStart.get(e.jobId)).map(t => (e.time - t) / 1000.0).getOrElse(-1.0)
-        jobs.add(f"  end ${e.jobId}%3d ${dt}%6.3fs")
-      }
-    })
-    val t0 = System.nanoTime()
-    val n = fn(spark, sfDir).count()
-    val dt = (System.nanoTime() - t0) / 1e9
+    val p = Profile(spark)(fn(spark, sfDir).count())
     graft.core.CacheRegistry.unpersistAll()
-    org.apache.spark.sql.graft.DatasetBridge.drainListenerBus(spark)
-    jobs.forEach(l => println(s"[census] $l"))
-    println(f"[census] $gate rows=$n wall=${dt}%.3fs")
+    for (j <- p.jobs) {
+      val site = j.start.stageInfos.maxBy(_.stageId).name
+      val desc = j.property("spark.job.description").getOrElse("")
+      println(f"[census] job ${j.id}%3d stages=${j.stages}%-2d tasks=${j.tasks}%-4d ${j.ms / 1000.0}%6.3fs $site%-40s $desc")
+    }
+    println(f"[census] $gate rows=${p.result.get} wall=${p.wallSec}%.3fs")
     spark.stop()
   }
 }

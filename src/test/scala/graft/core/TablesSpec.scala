@@ -5,11 +5,11 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 import graft.{SparkEntry, SparkSpec}
+import graft.obs.Profile
 
 /** `Tables` infers a fixture file's schema once per file version: later
   * reads of the same version start no Spark job while the DataFrame is
@@ -18,13 +18,10 @@ import graft.{SparkEntry, SparkSpec}
 class TablesSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Jobs started on this thread while `f` runs. */
+  /** Jobs started while `f` runs. */
   private def jobsDuring[T](f: => T): (T, Int) = {
-    val group = s"tables-${System.nanoTime()}"
-    spark.sparkContext.setJobGroup(group, "TablesSpec")
-    val out = try f finally spark.sparkContext.clearJobGroup()
-    DatasetBridge.drainListenerBus(spark)
-    (out, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
+    val p = Profile(spark)(f)
+    (p.result.get, p.jobs.size)
   }
 
   /** Write `df` as one parquet file at `dir/name.parquet`, replacing any. */

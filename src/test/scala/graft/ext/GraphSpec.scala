@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import graft.obs.Profile
 
 /** Connected components + dup clustering (the pairs→clusters step). */
 class GraphSpec extends SparkSpec {
@@ -83,10 +84,8 @@ class GraphSpec extends SparkSpec {
     val chain = spark.range(999).selectExpr("id AS src", "id + 1 AS dst")
     val pairs = spark.range(1000)
       .selectExpr("10000 + 2*id AS src", "10001 + 2*id AS dst")
-    spark.sparkContext.setJobGroup("cc-skew-stress", "GraphSpec skew stress")
-    val (labels, rounds) =
-      try Graph.connectedComponentsStats(chain.union(pairs), maxIter = 20)
-      finally spark.sparkContext.clearJobGroup()
+    val cc = Profile(spark)(Graph.connectedComponentsStats(chain.union(pairs), maxIter = 20))
+    val (labels, rounds) = cc.result.get
     val got = labels.as[(Long, Long)].collect()
     assert(got.length == 3000)
     assert(got.count(_._2 == 0L) == 1000, "the giant chain labels to node 0")
@@ -96,9 +95,7 @@ class GraphSpec extends SparkSpec {
     // job count: a fixed per-round stage budget (measured ~7.3 under AQE)
     // plus setup; a blow-up here means a per-round plan regression (an extra
     // exchange, a lost reused-partitioning, a join degenerating)
-    org.apache.spark.sql.graft.DatasetBridge.drainListenerBus(spark)
-    val jobs = spark.sparkContext.statusTracker
-      .getJobIdsForGroup("cc-skew-stress").length
+    val jobs = cc.jobs.size
     assert(jobs <= 9 * rounds + 10,
       s"per-round job budget exceeded: $jobs jobs over $rounds rounds")
   }

@@ -2,11 +2,11 @@ package graft.store
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.obs.Profile
 
 /** The current view's cost contract: once its base is built, a write
   * followed by a current read touches no version-log file, the read's
@@ -20,23 +20,11 @@ class CurrentViewSpec extends SparkSpec {
 
   test("a put then a Datalog query reads no version-log file, and the plan has no timestamp literal") {
     val store = DocumentStore(spark, Files.createTempDirectory("view").toString + "/db")
-    val group = s"current-view-${System.nanoTime()}"
-    val fileScans = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-          stages.incrementAndGet()
-          if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) fileScans.incrementAndGet()
-        }
-    }
     try {
       store.putAll((1 to 50).map(i => s"d$i" -> s"""{"v":$i}"""))
       val edn = "{:find [?e ?v] :where [[?e :v ?v] [(> ?v 10)]]}"
       assert(store.q(edn, schema).fold(fail(_), _.count()) == 40) // builds the base
-      spark.sparkContext.addSparkListener(listener)
-      spark.sparkContext.setJobGroup(group, "put then query")
-      try {
+      val putThenQuery = Profile(spark) {
         store.put("d51", """{"v":51}""")
         store.delete("d12")
         val df = store.q(edn, schema).fold(fail(_), identity)
@@ -45,15 +33,13 @@ class CurrentViewSpec extends SparkSpec {
         val lits = store.db().queryExecution.optimizedPlan.flatMap(_.expressions
           .flatMap(_.collect { case l: Literal if l.dataType == TimestampType => l }))
         assert(lits.isEmpty, s"timestamp literals in the current read's plan: $lits")
-      } finally spark.sparkContext.clearJobGroup()
-      org.apache.spark.sql.graft.DatasetBridge.drainListenerBus(spark)
-      assert(stages.get() > 0, "the listener saw the put's and the query's stages")
-      assert(fileScans.get() == 0,
-        s"${fileScans.get()} stages scanned version-log files after a put")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      store.close()
-    }
+      }
+      putThenQuery.result.get
+      val stages = putThenQuery.jobs.flatMap(_.start.stageInfos)
+      assert(stages.nonEmpty, "the query ran stages")
+      val fileScans = stages.count(_.rddInfos.exists(_.name == "FileScanRDD"))
+      assert(fileScans == 0, s"$fileScans stages scanned version-log files after a put")
+    } finally store.close()
   }
 
   test("a current door read parses only the delta: no JsonToStructs over the base's scan") {
@@ -89,39 +75,25 @@ class CurrentViewSpec extends SparkSpec {
 
   test("a point read runs one job with no shuffle stage: entity, entityTx and a withTx Match") {
     val store = DocumentStore(spark, Files.createTempDirectory("view-point").toString + "/db")
-    val prefix = s"point-read-${System.nanoTime()}-"
-    // stages per job, by read: a shuffle would add a map stage (in its
-    // own job under AQE) before the result stage
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .filter(_.startsWith(prefix))
-          .foreach(g => stages.add(g.stripPrefix(prefix) -> e.stageInfos.size))
-    }
-    def read[T](name: String)(f: => T): T = {
-      spark.sparkContext.setJobGroup(prefix + name, name)
-      try f finally spark.sparkContext.clearJobGroup()
-    }
     try {
       store.put("a", """{"v":1}""")
       store.put("a", """{"v":2}""")
       store.put("b", """{"v":3}""")
       store.delete("b")
       assert(store.entity("b").isEmpty) // first-use class loading stays out of the count
-      spark.sparkContext.addSparkListener(listener)
-      assert(read("entity")(store.entity("a")) == Some("""{"v":2}"""))
-      assert(read("entityTx")(store.entityTx("a")).isDefined)
-      assert(read("withTx Match")(store.withTx(Seq(
-        TxOp.Match("a", Some("""{"v":2}""")), TxOp.Put("c", """{"v":4}""")))).isDefined)
-      org.apache.spark.sql.graft.DatasetBridge.drainListenerBus(spark)
-      val byRead = stages.toArray(Array.empty[(String, Int)]).toSeq.groupBy(_._1).map {
-        case (name, jobs) => name -> jobs.map(_._2) }
+      val entity = Profile(spark)(store.entity("a"))
+      val entityTx = Profile(spark)(store.entityTx("a"))
+      val matched = Profile(spark)(store.withTx(Seq(
+        TxOp.Match("a", Some("""{"v":2}""")), TxOp.Put("c", """{"v":4}"""))))
+      assert(entity.result.get == Some("""{"v":2}"""))
+      assert(entityTx.result.get.isDefined)
+      assert(matched.result.get.isDefined)
+      // stages per job, by read: a shuffle would add a map stage (in its
+      // own job under AQE) before the result stage
+      val byRead = Map("entity" -> entity, "entityTx" -> entityTx, "withTx Match" -> matched)
+        .map { case (name, p) => name -> p.jobs.map(_.stages) }
       assert(byRead == Map("entity" -> Seq(1), "entityTx" -> Seq(1), "withTx Match" -> Seq(1)),
         s"stages per job, by read: $byRead")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      store.close()
-    }
+    } finally store.close()
   }
 }

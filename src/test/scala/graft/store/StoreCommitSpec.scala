@@ -9,9 +9,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graft.DatasetBridge
 
 import graft.SparkSpec
+import graft.obs.Profile
 import graft.stream.StoreChanges
 
 /** A driver-side commit (put, putAll, delete) writes its transaction file
@@ -57,17 +57,14 @@ class StoreCommitSpec extends SparkSpec {
     val (store, _) = newStore(spark, "commit-jobs")
     try {
       store.put("warm", """{"v":0}""") // first-use class loading stays out of the count
-      val group = s"commit-jobs-${System.nanoTime()}"
-      spark.sparkContext.setJobGroup(group, "driver-side commits")
-      try {
+      val commits = Profile(spark) {
         store.put("a", """{"v":1}""")
         store.putAll(Seq("b" -> """{"v":2}""", "c" -> """{"v":3}""", "b" -> """{"v":4}"""))
         store.delete("a")
         store.put("d", """{"v":5}""", Some(new Timestamp(store.now().getTime - 86400000L)))
-      } finally spark.sparkContext.clearJobGroup()
-      DatasetBridge.drainListenerBus(spark)
-      val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group)
-      assert(jobs.isEmpty, s"driver-side commits started ${jobs.length} Spark job(s)")
+      }
+      commits.result.get
+      assert(commits.jobs.isEmpty, s"driver-side commits started ${commits.jobs.size} Spark job(s)")
       import spark.implicits._
       assert(store.db().select("id", "doc").as[(String, String)].collect().toMap ==
         Map("warm" -> """{"v":0}""", "b" -> """{"v":4}""", "c" -> """{"v":3}""",

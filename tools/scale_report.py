@@ -1,12 +1,13 @@
 #!/usr/bin/env python3
 """Summarize a scale-ritual pair (/tmp/bench_sfscale_{sf1,sf10}.json).
 
-Prints a per-gate decade table sorted by wall ratio (worst first):
-sf1/sf10 wall, cpu, gc, jobs, and the ratio after dividing out the two
-runs' cpu-canary speeds (a hot host inflates walls uniformly; the canary
-ratio separates host drift from plan growth). Gates whose ratio exceeds
-the --flag threshold (default 10x, ~linear at 10x data with fixed
-overheads amortized) are marked SUPER-LINEAR.
+Prints a per-gate decade table sorted by cpu ratio (worst first):
+sf1/sf10 wall, the wall ratio, the process-cpu ratio (`cpu x`), jobs and
+gc. The flag reads the cpu ratio, not the wall ratio: a loaded host
+inflates wall time at flat cpu, while a plan that grows faster than its
+data grows its cpu too. Gates whose cpu ratio exceeds the --flag
+threshold (default 10x, ~linear at 10x data with fixed overheads
+amortized) are marked SUPER-LINEAR.
 """
 import json, sys, os
 
@@ -39,28 +40,23 @@ def row(d, name):
     m["wall_s"] = d["queries"].get(name, m.get("wall_s"))
     return m
 
-can1 = a.get("canary", {}).get("cpu_pre", 1.0)
-can10 = b.get("canary", {}).get("cpu_pre", 1.0)
-host = can10 / can1 if can1 else 1.0
 common = sorted(set(a["queries"]) & set(b["queries"]))
 only1 = set(a["queries"]) - set(b["queries"])
 onlyX = set(b["queries"]) - set(a["queries"])
 if only1 or onlyX:
     print(f"NOT COMPARED — sf1-only: {sorted(only1)}  sf10-only: {sorted(onlyX)}")
-print(f"canaries: sf1 cpu={can1:.3f}s sf10 cpu={can10:.3f}s (host ratio {host:.2f})")
-print(f"{'gate':32s} {'sf1 s':>7s} {'sf10 s':>8s} {'ratio':>6s} {'adj':>6s} "
+print(f"{'gate':32s} {'sf1 s':>7s} {'sf10 s':>8s} {'ratio':>6s} "
       f"{'cpu x':>6s} {'jobs':>9s} {'gc ms':>11s}")
 rows = []
 for g in common:
     r1, r10 = row(a, g), row(b, g)
     ratio = r10["wall_s"] / max(r1["wall_s"], 1e-9)
-    adj = ratio / host if host else ratio
     cpux = r10["cpu_s"] / max(r1["cpu_s"], 1e-9)
-    rows.append((adj, g, r1, r10, ratio, cpux))
-for adj, g, r1, r10, ratio, cpux in sorted(rows, reverse=True):
-    mark = "  SUPER-LINEAR" if adj > flag else ""
+    rows.append((cpux, g, r1, r10, ratio))
+for cpux, g, r1, r10, ratio in sorted(rows, reverse=True):
+    mark = "  SUPER-LINEAR" if cpux > flag else ""
     print(f"{g:32s} {r1['wall_s']:7.2f} {r10['wall_s']:8.2f} {ratio:6.1f} "
-          f"{adj:6.1f} {cpux:6.1f} {r1['jobs']:>3}->{r10['jobs']:<4} "
+          f"{cpux:6.1f} {r1['jobs']:>3}->{r10['jobs']:<4} "
           f"{r1['gc_ms']:>4}->{r10['gc_ms']:<5}{mark}")
-n_bad = sum(1 for adj, *_ in rows if adj > flag)
-print(f"\n{len(rows)} gates compared; {n_bad} above {flag:.0f}x (host-adjusted)")
+n_bad = sum(1 for cpux, *_ in rows if cpux > flag)
+print(f"\n{len(rows)} gates compared; {n_bad} above {flag:.0f}x (cpu ratio)")

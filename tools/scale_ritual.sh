@@ -1,9 +1,11 @@
 #!/usr/bin/env bash
 # sf1 -> sf10 scaling ritual (BASELINE.md "Round-14: sf1 -> sf10 scaling").
 # Builds the scaled corpora if absent, then benches at both SFs with
-# per-gate wall/cpu/gc/jobs + the host canary. Compare the two JSON
-# lines: a gate whose wall ratio is far above ~10x at 10x data (after
-# dividing out the canary) has a super-linear plan.
+# per-gate wall/cpu/gc/jobs. Compare the two JSON lines: a gate whose cpu
+# ratio is far above ~10x at 10x data has a super-linear plan (cpu, unlike
+# wall, does not grow with host load). Both legs run cold, one pass per
+# gate in a fresh JVM (SPARK_GRAFT_BENCH_WARMUP=0), where the default
+# bench run times a second, warm pass.
 #
 #   tools/scale_ritual.sh [gates-csv]
 #
