@@ -50,10 +50,13 @@ object TxOp {
   * writes through one commit point per store instance (a JVM lock +
   * monotonic tx clock — the moral equivalent for a driver-owned control
   * plane; match/cas REQUIRE that serialization, SURVEY.md §7.4 risk 1).
-  * Data layout: rows are partitioned by `valid_date` so as-of reads prune
-  * historical partitions, and each transaction is one small parquet file
-  * — at warehouse scale you'd compact these, but the read view is
-  * identical. A driver-side transaction (put, putAll, delete, matchPut)
+  * Data layout: `<path>/g=<N>/valid_date=…/part-…`. Rows are partitioned
+  * by `valid_date` so as-of reads prune historical partitions, and each
+  * transaction is one small parquet file in the current generation `N`
+  * until [[compact]] rewrites them as generation `N+1`. A generation is
+  * never renamed or changed in place except by appends, so a read built
+  * on one keeps its files through the next compaction (which deletes
+  * only `N-1`). A driver-side transaction (put, putAll, delete, matchPut)
   * writes its file on the driver through Spark's own parquet writer, so
   * a commit runs no Spark job; [[putBatch]], whose rows never reach the
   * driver, appends with a write job.
@@ -75,7 +78,7 @@ object TxOp {
   * from maintained indexes, and this store keeps the moral equivalent — a
   * BASE (the live top-1 version per id as of a base time vt0, materialized
   * once with `localCheckpoint`, so it is lineage-free and no compaction
-  * can swap files under it) plus a driver-side DELTA (the rows this
+  * can delete files under it) plus a driver-side DELTA (the rows this
   * instance appended since vt0, and rows still future-dated at vt0). A
   * current read picks the delta's winners at its valid time on the driver,
   * filters their ids out of the base's own scan, and unions the live
@@ -100,8 +103,8 @@ class DocumentStore(val spark: SparkSession, val path: String) {
     * lock, and the tx clock is instance-local — a second driver on the same
     * path would corrupt both silently (SURVEY §7.4 risk 1; Crux gets the
     * same guarantee from its single Kafka tx-log). So construction takes an
-    * exclusive create on `<path>.lock` (sibling file — compact()'s dir swap
-    * never touches it) and FAILS FAST naming the other holder. A lock left
+    * exclusive create on `<path>.lock` (a sibling of the generations) and
+    * FAILS FAST naming the other holder. A lock left
     * by a crashed process on THIS host is detected dead via its pid and
     * reclaimed; a lock from another host is never presumed stale — delete
     * it by hand after confirming that driver is gone. */
@@ -109,18 +112,37 @@ class DocumentStore(val spark: SparkSession, val path: String) {
   locally { DocumentStore.acquire(spark, path, lockToken) }
   @volatile private var closed = false
 
-  // Seed the tx clock from the table's max committed txTime (one footer-
-  // stats-friendly aggregate at open). A previous instance's clock can
-  // have run AHEAD of wall-clock (same-ms collision bumps, a backwards
-  // NTP step); restarting at wall-clock would assign txTimes <= already-
+  private val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The current generation: commits write into, and reads list, `g=<gen>`.
+    * Moved only by [[rewriteTable]], under `lock`. */
+  @volatile private var gen = 0L
+  private def genDir(g: Long): Path = new Path(path, s"g=$g")
+
+  // Open the log under the lock: the highest generation is current, and a
+  // crashed compaction's hidden temp and older generations are deleted.
+  // Then seed the tx clock from the table's max committed txTime (one
+  // footer-stats-friendly aggregate). A previous instance's clock can have
+  // run AHEAD of wall-clock (same-ms collision bumps, a backwards NTP
+  // step); restarting at wall-clock would assign txTimes <= already-
   // committed ones — changesSince(checkpoint) would silently drop the new
   // writes and asOf's txTime-desc tie-break would prefer the OLD payload.
   // The single-driver lock serializes concurrent opens; this serializes
   // the clock across sequential ones.
-  locally {
+  try {
+    fs.mkdirs(new Path(path))
+    val names = fs.listStatus(new Path(path)).map(_.getPath.getName)
+    if (names.exists(_.startsWith("valid_date="))) throw new DocumentStore.FlatLayoutException(path)
+    gen = names.collect { case DocumentStore.GenName("", g) => g.toLong }.maxOption.getOrElse(0L)
+    names.foreach {
+      case n @ DocumentStore.GenName(hidden, g) if hidden.nonEmpty || g.toLong < gen =>
+        fs.delete(new Path(path, n), true)
+      case _ => ()
+    }
+    fs.mkdirs(genDir(gen))
     val m = versionsRaw().agg(max(col("txTime"))).head().getTimestamp(0)
-    if (m != null) { lastTx.updateAndGet(prev => math.max(prev, m.getTime)); () }
-  }
+    if (m != null) lastTx.updateAndGet(prev => math.max(prev, m.getTime))
+  } catch { case e: Throwable => DocumentStore.release(spark, path, lockToken); throw e }
 
   /** Release the single-driver lock. Idempotent; the store object must not
     * be used afterwards (a later re-open is a NEW instance on the path). */
@@ -177,7 +199,7 @@ class DocumentStore(val spark: SparkSession, val path: String) {
         Cast(Literal(day, DateType), StringType, zone).eval().toString)
     }
     try rows.groupBy(r => partition(r.validFrom)).foreach { case (dir, part) =>
-      DocumentStore.writeFile(spark, new Path(path, dir),
+      DocumentStore.writeFile(spark, new Path(genDir(gen), dir),
         part.map(r => InternalRow(UTF8String.fromString(r.id), fromJavaTimestamp(r.validFrom),
           fromJavaTimestamp(r.txTime), r.deleted, UTF8String.fromString(r.doc))))
     } catch { case e: Throwable => dropView(); throw e }
@@ -194,34 +216,19 @@ class DocumentStore(val spark: SparkSession, val path: String) {
     require(!closed, s"document store at $path is closed — writes after " +
       "close() would bypass the single-driver lock")
 
-  /** Versioned table INCLUDING the `valid_date` directory-partition column.
-    * As-of readers filter on it so Spark prunes whole date partitions from
-    * the scan — the layout's entire point at warehouse scale. */
-  private def versionsRaw(): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The current generation's versions INCLUDING the `valid_date`
+    * directory-partition column. As-of readers filter on it so Spark prunes
+    * whole date partitions from the scan — the layout's entire point at
+    * warehouse scale. The files are listed here, when the read is built. */
+  private def versionsRaw(): DataFrame =
     // EXPLICIT schema, never inference: a reader can race an in-flight
-    // append (continuous ingest is the norm), and mid-write the directory
-    // exists holding only `_temporary` task files — schema inference
-    // throws UNABLE_TO_INFER_SCHEMA there, where the correct answer is
-    // simply "the committed view" (empty on a first-ever append). The
-    // schema is the VersionedDoc encoder's plus the valid_date partition
-    // column, i.e. exactly what `append` writes.
-    if (fs.exists(p))
-      spark.read.schema(versionSchema).parquet(path)
-    else {
-      // compact()'s swap is rename(path→.old) then rename(.compact→path):
-      // a reader landing between the two — or after a crash there — finds
-      // the path absent while .old holds the FULL pre-compact data.
-      // Reading .old in that window is the correct snapshot (compaction
-      // changes layout, never rows); silently returning empty here made
-      // the swap window a wrong-answer window, not just a slow one.
-      val bak = new org.apache.hadoop.fs.Path(path + ".old")
-      if (fs.exists(bak)) spark.read.schema(versionSchema).parquet(bak.toString)
-      else spark.emptyDataset[VersionedDoc].toDF()
-        .withColumn("valid_date", to_date(col("validFrom")))
-    }
-  }
+    // append (continuous ingest is the norm), and mid-write the generation
+    // holds only `_temporary` task files — schema inference throws
+    // UNABLE_TO_INFER_SCHEMA there, where the correct answer is simply
+    // "the committed view" (empty on a first-ever append). The schema is
+    // the VersionedDoc encoder's plus the valid_date partition column,
+    // i.e. exactly what `append` writes.
+    spark.read.schema(versionSchema).parquet(genDir(gen).toString)
 
   private lazy val versionSchema =
     org.apache.spark.sql.Encoders.product[VersionedDoc].schema
@@ -294,15 +301,16 @@ class DocumentStore(val spark: SparkSession, val path: String) {
           lit(false).as("deleted"),
           col("doc").cast("string").as("doc"),
           to_date(lit(vf)).as("valid_date"))
-        .write.mode(SaveMode.Append).partitionBy("valid_date").parquet(path)
+        .write.mode(SaveMode.Append).partitionBy("valid_date").parquet(genDir(gen).toString)
       tx
     }
 
   /** Compact the version log: rewrite the accumulated per-put files into
-    * one file per valid_date partition (read view unchanged — same rows).
-    * At warehouse scale this is the periodic compaction job every
-    * append-log table needs; here it runs under the store's write lock. */
-  def compact(): Unit = rewriteTable("compact", identity)
+    * one file per valid_date partition of the next generation (read view
+    * unchanged — same rows). At warehouse scale this is the periodic
+    * compaction job every append-log table needs; here it runs under the
+    * store's write lock. */
+  def compact(): Unit = rewriteTable("compact", identity, erase = false)
 
   /** Crux `evict`: PHYSICAL erasure of every version of the given ids —
     * the GDPR right-to-be-forgotten operation, and the one thing a
@@ -310,9 +318,10 @@ class DocumentStore(val spark: SparkSession, val path: String) {
     * visibility; history, as-of reads before the delete, and the payload
     * bytes all remain). Eviction rewrites the version log without the
     * ids' rows — the only way to truly remove data from an immutable
-    * append log (crux's evict rewrites its KV indexes the same way) —
-    * using [[compact]]'s crash-safe rename-rename swap and the same
-    * clustered layout. Serialized with writers under the store lock; a
+    * append log (crux's evict rewrites its KV indexes the same way) — as
+    * the next generation, like [[compact]], and deletes every older
+    * generation before it returns, so no file left on disk holds the ids'
+    * bytes. Serialized with writers under the store lock; a
     * subsequent [[entity]]/[[history]]/[[changes]] shows NO trace of the
     * id, as if it never existed. Heavier than delete by design: one
     * full-table rewrite per eviction batch, so batch ids and run
@@ -322,27 +331,24 @@ class DocumentStore(val spark: SparkSession, val path: String) {
     require(ids.forall(i => i != null && i.nonEmpty), "evict: null/empty id")
     lock.synchronized {
       dropView()
-      rewriteTable("evict", _.filter(!col("id").isin(ids: _*)))
+      rewriteTable("evict", _.filter(!col("id").isin(ids: _*)), erase = true)
     }
   }
 
   def evict(id: String): Unit = evict(Seq(id))
 
-  private def rewriteTable(opName: String,
-                           transform: DataFrame => DataFrame): Unit = lock.synchronized {
+  /** Rewrite the log as generation `gen + 1`: written under a hidden name
+    * that no listing includes, published by one directory rename, then
+    * made current, all under the lock, so no commit lands in between. A
+    * crash before the rename leaves the old generation current, after it
+    * the new one (the open deletes the rest). Generation `gen - 1` is
+    * deleted, so a read built before this rewrite still finds its files;
+    * `erase` deletes `gen` too. */
+  private def rewriteTable(opName: String, transform: DataFrame => DataFrame,
+                           erase: Boolean): Unit = lock.synchronized {
     requireOpen()
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a previous rewrite that crashed between its two renames left the data
-    // at `.old` and the path absent — restore it first (readers were
-    // already being served from `.old` by versionsRaw's fallback)
-    val prevBak = new Path(path + ".old")
-    if (!fs.exists(p) && fs.exists(prevBak) && !fs.rename(prevBak, p))
-      throw new java.io.IOException(
-        s"$opName: crashed-swap recovery rename $prevBak -> $p failed")
-    if (!fs.exists(p)) return
-    val tmp = new Path(path + ".compact")
+    val next = gen + 1
+    val tmp = new Path(path, s".g=$next")
     // one file per date partition, rows CLUSTERED by (id, validFrom): parquet
     // row-group min/max stats on `id` become tight ranges, so post-rewrite
     // entity()/history(id) point reads skip every row group but the entity's
@@ -357,43 +363,27 @@ class DocumentStore(val spark: SparkSession, val path: String) {
       .sortWithinPartitions(col("valid_date"), col("id"), col("validFrom"))
       .write.mode(SaveMode.Overwrite).partitionBy("valid_date")
       .parquet(tmp.toString)
-    // rename-rename swap (never delete-then-rename): the live path is
-    // absent only between the two renames, and a crash there leaves the
-    // full data at `<path>.old` + `<path>.compact` for recovery instead of
-    // deleted. Concurrent readers hitting that window (single-writer
-    // maintenance op — run it off-peak) see a transient missing-path error,
-    // not silent data loss.
-    val bak = new Path(path + ".old")
-    if (fs.exists(bak)) fs.delete(bak, true)
-    // a false return from HDFS rename is a real failure mode (destination
-    // exists, permissions, cross-volume) — blindly continuing would delete
-    // the only surviving copy; abort instead, leaving tmp/bak for recovery
-    if (!fs.rename(p, bak))
-      throw new java.io.IOException(
-        s"$opName: rename $p -> $bak failed; rewritten data left at $tmp")
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(
-        s"$opName: rename $tmp -> $p failed; original data left at $bak")
-    if (fs.exists(p)) fs.delete(bak, true)
+    DocumentStore.rewriteHook("written")
+    if (!fs.rename(tmp, genDir(next)))
+      throw new java.io.IOException(s"$opName: rename $tmp -> ${genDir(next)} failed")
+    gen = next
+    DocumentStore.rewriteHook("published")
+    fs.delete(genDir(next - 2), true)
+    if (erase) fs.delete(genDir(next - 1), true)
   }
 
-  /** Files per `valid_date` partition — the fragmentation the
-    * one-file-per-transaction append layout accumulates. Metadata-only
-    * (a directory listing, no data read); the operator-facing health
-    * probe behind [[compactIfFragmented]]. */
-  def fragmentation(): Map[String, Int] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    fs.listStatus(p).toSeq
+  /** Files per `valid_date` partition of the current generation — the
+    * fragmentation the one-file-per-transaction append layout accumulates.
+    * Metadata-only (a directory listing, no data read); the operator-facing
+    * health probe behind [[compactIfFragmented]]. */
+  def fragmentation(): Map[String, Int] =
+    fs.listStatus(genDir(gen)).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("valid_date="))
       .map { dir =>
         dir.getPath.getName -> fs.listStatus(dir.getPath)
           .count(f => f.isFile && !f.getPath.getName.startsWith("_") &&
             !f.getPath.getName.startsWith("."))
       }.toMap
-  }
 
   /** Compaction POLICY over the manual [[compact]]: rewrite only when some
     * date partition has accumulated more than `maxFilesPerPartition`
@@ -568,11 +558,9 @@ class DocumentStore(val spark: SparkSession, val path: String) {
     * tombstone included — the resolver's cut with the id pushed to
     * parquet, newest first, top 1: one stage, no shuffle. */
   private[graft] def versionAt(id: String, vt: Timestamp): Option[VersionedDoc] =
-    retryOnSwap {
-      cut(versionsRaw().filter(col("id") === id), vt, DocumentStore.MaxTxTime)
-        .drop("valid_date").orderBy(newestFirst: _*).limit(1)
-        .as[VersionedDoc].collect().headOption
-    }
+    cut(versionsRaw().filter(col("id") === id), vt, DocumentStore.MaxTxTime)
+      .drop("valid_date").orderBy(newestFirst: _*).limit(1)
+      .as[VersionedDoc].collect().headOption
 
   def asOf(validTime: Timestamp): DataFrame = asOf(validTime, DocumentStore.MaxTxTime)
 
@@ -726,24 +714,6 @@ class DocumentStore(val spark: SparkSession, val path: String) {
       _.filter(col("id") === id).select("doc")
         .as[String].collect().headOption)
   }
-
-  /** One rebuild-and-retry for the store's OWN driver-side reads across a
-    * compaction swap: a plan lists the parquet files at DataFrame build
-    * time and reads them at action time — a rewrite landing in that
-    * millisecond gap (routine under [[startMaintenance]], not just the
-    * manual off-peak ritual) renames the listed files away and the action
-    * throws FAILED_READ_FILE. `f` must BUILD the plan as well as run it,
-    * so the retry lists the post-swap files; failing twice needs two
-    * full compactions inside two consecutive point reads. Lazy DataFrames
-    * handed to callers (db/asOf/q/changes) keep Spark's own contract:
-    * re-derive after a swap, as the error message instructs. */
-  private def retryOnSwap[T](f: => T): T =
-    try f catch {
-      case e: Exception
-          if Option(e.getMessage).exists(m =>
-            m.contains("FAILED_READ_FILE") || m.contains("FILE_NOT_EXIST") ||
-              m.contains("does not exist")) => f
-    }
 
   /** Q1: entity lookup — current doc payload for `id`, if visible. */
   def entity(id: String): Option[String] = entity(id, now())
@@ -976,6 +946,17 @@ object DocumentStore {
     * base many times over. */
   private[store] val MaxTypedRelations = 8
 
+  /** A generation directory's name, `g=<N>`, or `.g=<N>` while a
+    * compaction writes it (hidden: Spark's listings skip a leading '.'). */
+  private val GenName = """(\.?)g=(\d+)""".r
+
+  /** Thrown on opening a path whose `valid_date=` partitions sit directly
+    * under it: the flat layout this store wrote before generations. Read
+    * as a generation layout it would look empty, so it is refused. */
+  final class FlatLayoutException(val path: String) extends IllegalStateException(
+    s"document store at $path has the flat layout (valid_date= directories " +
+      "directly under the path); this store reads only <path>/g=<N>/valid_date=…")
+
   /** The data columns of a transaction file as [[putBatch]]'s write task
     * lays them out (the tx clocks and the tombstone flag are never null). */
   private val FileSchema = StructType(Seq(
@@ -1028,6 +1009,11 @@ object DocumentStore {
     * recreate a fresh lock. Lets the spec force that interleaving
     * deterministically instead of hoping a thread race lands on it. */
   private[store] var reclaimInterleaveHook: () => Unit = () => ()
+
+  /** Test hook: runs inside a compaction once its generation is
+    * `"written"` (before the publishing rename) and once it is
+    * `"published"` (before the older generation is deleted). */
+  private[store] var rewriteHook: String => Unit = _ => ()
 
   /** Test hook: transforms the post-create verification read-back. Lets the
     * spec simulate an object store whose read lags the exclusive create

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{DateType, StructField, StructType}
 
 import graft.core.VersionedDoc
 import graft.ext.Dedup
@@ -27,29 +26,25 @@ import graft.store.DocumentStore
   *    consumers must be idempotent under replay — [[maintainShingleIndex]]
   *    anti-joins against the index's own doc ids, so replayed or
   *    already-indexed docs are no-ops;
-  *  - [[DocumentStore.compact]] rewrites the table in place (swap-rename).
-  *    A running tail SURVIVES it (no failed batch: `ignoreMissingFiles`
-  *    covers the list-then-swap race) but sees the compacted files as new
-  *    and replays the history once — the same idempotence the catch-up
-  *    replay already demands. Compacting during quiet hours minimizes the
-  *    replay cost; it is no longer a correctness requirement
+  *  - [[DocumentStore.compact]] writes the log as a new generation
+  *    directory (`<path>/g=<N+1>`) and later deletes the old one. A running
+  *    tail SURVIVES it (no failed batch: `ignoreMissingFiles` covers a file
+  *    deleted after the source listed it) but sees the new generation's
+  *    files as new and replays the history once — the same idempotence the
+  *    catch-up replay already demands. Compacting during quiet hours
+  *    minimizes the replay cost; it is not a correctness requirement
   *    (CompactionRaceSpec is the drill).
   */
 object StoreChanges {
 
-  /** Store-table schema for the file source (readStream needs it up front):
-    * the [[VersionedDoc]] columns plus the `valid_date` directory-partition
-    * column the writer adds. */
-  val schema: StructType = StructType(
-    Encoders.product[VersionedDoc].schema.fields :+
-      StructField("valid_date", DateType))
-
   /** Tail the store as a stream of version rows (id, validFrom, txTime,
-    * deleted, doc). `maxFilesPerTrigger` bounds a micro-batch — catch-up
-    * over a long history proceeds in increments instead of one giant
-    * batch.
+    * deleted, doc). The source lists every generation's files
+    * (`recursiveFileLookup`, so no directory becomes a column: the schema
+    * is the transaction file's). `maxFilesPerTrigger` bounds a
+    * micro-batch — catch-up over a long history proceeds in increments
+    * instead of one giant batch.
     *
-    * `ignoreMissingFiles` is set for compaction-tolerance: a compact() swap
+    * `ignoreMissingFiles` is set for compaction-tolerance: a compaction
     * can delete a file BETWEEN this source listing it and reading it, and
     * without the option that batch fails the query. With it, the batch
     * skips the vanished file — and loses nothing, because every row it held
@@ -61,11 +56,11 @@ object StoreChanges {
   def stream(spark: SparkSession, storePath: String,
              maxFilesPerTrigger: Int = 64): DataFrame =
     spark.readStream
-      .schema(schema)
+      .schema(Encoders.product[VersionedDoc].schema)
+      .option("recursiveFileLookup", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .option("ignoreMissingFiles", "true")
       .parquet(storePath)
-      .drop("valid_date")
 
   /** Keep a staged shingle index ([[Dedup.stageShingleIndex]]) maintained
     * from the store's change feed: every committed put flows through the

@@ -3,6 +3,8 @@ package graft.store
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 
 /** Bitemporal invariants per the reference's Crux usage:
@@ -170,10 +172,10 @@ class DocumentStoreSpec extends SparkSpec {
   }
 
   test("maintenance daemon under live traffic: no lost writes, no reader crashes") {
-    // the daemon makes the compaction swap window ROUTINE instead of an
-    // off-peak ritual — writes must serialize with the rewrite (same
-    // store lock) and concurrent readers must ride the .old fallback
-    // through the rename-rename swap, never a task-killing throw
+    // the daemon makes compaction ROUTINE instead of an off-peak ritual —
+    // writes must serialize with the rewrite (same store lock) and a
+    // concurrent read keeps the generation it listed, which the next
+    // compaction leaves in place: never a task-killing throw
     val s = freshStore()
     val h = s.startMaintenance(intervalMs = 50L, maxFilesPerPartition = 2)
     val readerErrors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -494,11 +496,22 @@ class DocumentStoreSpec extends SparkSpec {
       store.put("user1", """{"name":"ada","email":"a2@x"}""",
         validFrom = Some(java.sql.Timestamp.valueOf("2020-06-01 00:00:00")))
       store.put("user2", """{"name":"bob"}""")
+      // the files under the store holding the payload's bytes
+      val payload = "a2@x".getBytes("UTF-8")
+      def holding() = Files.walk(java.nio.file.Paths.get(store.path)).iterator().asScala
+        .filter(Files.isRegularFile(_))
+        .filter(f => Files.readAllBytes(f).sliding(payload.length).exists(_.sameElements(payload)))
+        .toList
+      // a compaction keeps the previous generation on disk: the evict
+      // below must erase it too
+      store.compact()
+      assert(holding().size >= 2, "both generations hold the payload before the evict")
       store.delete("user1")
       // delete = tombstone: invisible NOW but history and old snapshots remain
       assert(store.entity("user1").isEmpty)
       assert(store.history("user1").count() == 3, "tombstone delete keeps history")
       store.evict("user1")
+      assert(holding().isEmpty, s"evicted bytes still on disk in ${holding()}")
       // evict = erasure: NO trace anywhere — history, changes, snapshots
       assert(store.entity("user1").isEmpty)
       assert(store.history("user1").count() == 0, "evict erases the whole chain")

@@ -89,8 +89,9 @@ class StoreCommitSpec extends SparkSpec {
         val batched = added(la, path)(
           store.putBatch(la.createDataFrame(Seq((s"b-$instant", """{"v":2}""")))
             .toDF("id", "doc"), vf))
-        assert(committed.split("/").head == dir, s"$instant: commit in $committed")
-        assert(batched.split("/").head == dir, s"$instant: putBatch in $batched")
+        // both land in the current (first) generation's date partition
+        assert(committed.split("/").take(2).toSeq == Seq("g=0", dir), s"$instant: commit in $committed")
+        assert(batched.split("/").take(2).toSeq == Seq("g=0", dir), s"$instant: putBatch in $batched")
         assert(committed.split("/").last.startsWith("part-"))
         val (fc, fb) = (footer(la, new Path(path, committed)), footer(la, new Path(path, batched)))
         val (sc, sb) = (fc.getFileMetaData.getSchema, fb.getFileMetaData.getSchema)
